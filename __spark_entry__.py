@@ -1237,13 +1237,12 @@ FROM u GROUP BY 1
 
 def _q_hamming_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generic banded-Hamming pair operator
-    (ops/dedup.hamming_near_pairs — the engine behind the perceptual
-    image-dHash and audio-fingerprint near-dup paths) over a
-    SQL-reproducible 64-bit fingerprint (the document's n_chars), so the
-    DuckDB twin is a plain brute-force bit_count(xor) join. The banding,
-    grid salting and first-matching-band residual are exactly what the
-    image/audio paths execute; the media DECODE stages keep their pytest
-    oracles (tests/test_ops.py::test_image_near_duplicates et al.)."""
+    (ops/dedup.hamming_near_pairs — the engine behind the simhash
+    near-dup paths) over a SQL-reproducible 64-bit fingerprint (the
+    document's n_chars), so the DuckDB twin is a plain brute-force
+    bit_count(xor) join. The banding, grid salting and
+    first-matching-band residual are exactly what the simhash paths
+    execute."""
     from logrange_spark.ops.dedup import hamming_near_pairs
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -2274,6 +2273,41 @@ def _cc_fixture_bytes(rows: list[tuple[int, str]]) -> bytes:
     return bytes(out)
 
 
+def _cc_url_keep_best(recs: DataFrame) -> DataFrame:
+    """URL keep-best over (doc_id, url, payload): rank 1 of a window
+    over the canonical URL key ordered by doc_id, i.e. the min doc_id
+    per key. Records with a null or blank url each form their own
+    partition and are kept (url_dedup's automatic keepers)."""
+    from pyspark.sql.window import Window as PSWindow
+
+    from logrange_spark.ops import url as url_ops
+
+    _valid = F.col("url").isNotNull() & (
+        F.btrim(F.col("url"), F.lit(" \t\n\r\f\v")) != ""
+    )
+    # nulls last: a record id with no digits parses to a null doc_id,
+    # which must not outrank the real min-id keeper of its URL
+    w_url = PSWindow.partitionBy("_ugrp", "_ukey").orderBy(
+        F.col("doc_id").asc_nulls_last()
+    )
+    return (
+        recs.select(
+            "doc_id",
+            "url",
+            "payload",
+            F.when(_valid, url_ops.normalize_url(F.col("url"))).alias(
+                "_ukey"
+            ),
+            F.when(_valid, F.lit(0)).otherwise(F.col("doc_id")).alias(
+                "_ugrp"
+            ),
+        )
+        .withColumn("_rn", F.row_number().over(w_url))
+        .where(F.col("_rn") == 1)
+        .select("doc_id", "url", "payload")
+    )
+
+
 def _cc_stages(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, DataFrame]]:
@@ -2311,12 +2345,9 @@ def _cc_stages(
     that single spread token stream (r15 — each previously re-split
     the text). All data-scaled joins carry merge hints (round-13
     broadcast audit)."""
-    from pyspark.sql.window import Window as PSWindow
-
     from logrange_spark.ingest import wet
     from logrange_spark.ops import html as ophtml
     from logrange_spark.ops import sampling
-    from logrange_spark.ops import url as url_ops
 
     d = _fixture_dir(
         "ccpipe",
@@ -2365,27 +2396,7 @@ def _cc_stages(
         F.col("target_uri").alias("url"),
         "payload",
     )
-    _valid = F.col("url").isNotNull() & (
-        F.btrim(F.col("url"), F.lit(" \t\n\r\f\v")) != ""
-    )
-    w_url = PSWindow.partitionBy("_ugrp", "_ukey").orderBy("doc_id")
-    kept = (
-        recs.select(
-            "doc_id",
-            "url",
-            "payload",
-            F.when(_valid, url_ops.normalize_url(F.col("url"))).alias(
-                "_ukey"
-            ),
-            F.when(_valid, F.lit(0)).otherwise(F.col("doc_id")).alias(
-                "_ugrp"
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(w_url))
-        .where(F.col("_rn") == 1)
-        .select("doc_id", "url", "payload")
-    )
-    pages = ophtml.html_documents(kept)
+    pages = ophtml.html_documents(_cc_url_keep_best(recs))
     # C4 line rules + page gates, then materialize ONCE: everything
     # below re-reads this frame (dictionary pass, gate maps, dedup
     # token frame), so the checkpoint pins decode+parse+line-rules to a
@@ -2459,12 +2470,16 @@ def _cc_stages(
     # copy corpus-wide; rebuilt text is the lowercased token stream.
     # Second materialization point — three consumers below; the kept
     # token array travels WITH the checkpoint (with_tokens) so the
-    # contamination stage never re-splits the rebuilt text.
+    # contamination stage never re-splits the rebuilt text. A document
+    # the span removal empties is dropped here: with no tokens it has no
+    # perplexity and no place in a training shard (the twin's per-doc
+    # LM CTE has no row for it).
     spanned_t = (
         dedup.remove_repeated_spans(
             surv, toked=toked_surv, with_tokens=True
         )
         .select("doc_id", "text", "tokens")
+        .where(F.size("tokens") > 0)
         .localCheckpoint(eager=False)
     )
     spanned = spanned_t.select("doc_id", "text")

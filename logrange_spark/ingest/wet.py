@@ -312,8 +312,9 @@ def read_warc(
     """WARC ``response`` records with the HTTP envelope split off:
     (path, record_offset, record_id, target_uri, warc_date, http_status,
     http_headers, payload). The payload is the raw HTTP body bytes
-    (HTML, image, ...) — feed binary media straight into the multimodal
-    ops. Responses whose HTTP head doesn't parse yield null
+    (HTML, image, ...) — ``ops.html`` extracts text from HTML bodies and
+    ``ops.multimodal.attach_binary`` wraps any body with size/MD5/MIME
+    metadata. Responses whose HTTP head doesn't parse yield null
     status/headers and the whole record body as payload."""
 
     def _warc_row(p: str, off: int, h: dict, body: bytes) -> tuple:

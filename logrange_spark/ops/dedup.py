@@ -1471,7 +1471,7 @@ def hamming_near_pairs(
 ) -> DataFrame:
     """All pairs whose integer hashes differ in at most ``max_hamming``
     of the low ``bits`` bits — generic banded Hamming blocking for any
-    fixed-width signature (perceptual image hashes, external simhashes).
+    fixed-width signature (simhashes, external fingerprints).
 
     Recall is GUARANTEED by pigeonhole: the bits split into
     ``max_hamming + 1`` disjoint bands, so ≤ max_hamming differing bits
@@ -1536,7 +1536,7 @@ def persist_corpus_fingerprints(
     has ``persist_corpus_lsh`` and embeddings
     ``ann.persist_corpus_embeddings`` — this closes the family,
     VERDICT r13 #2). Works for ANY ≤64-bit signature column (simhash,
-    dHash, audio fingerprints); the band layout is
+    any external fingerprint); the band layout is
     ``_hamming_masked_and_bands``, shared with ``hamming_near_pairs``,
     so index and probe can never disagree.
 

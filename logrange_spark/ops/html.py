@@ -10,8 +10,7 @@ malformed tag soup real crawls contain (HTMLParser never raises on bad
 nesting; a try/except guards the rest).
 
 100 TB shape: extraction is an Arrow-batched ``mapInPandas`` over the
-payload column — one Python pass per document, no shuffle, exactly the
-multimodal-decode execution pattern (ops/multimodal.py). Block-level
+payload column — one Python pass per document, no shuffle. Block-level
 tags emit newlines so paragraph structure survives for the
 line-grained ops (``boilerplate_lines``, bullet/ellipsis rules);
 inline tags don't split words.

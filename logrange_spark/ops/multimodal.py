@@ -1,46 +1,17 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Binary payload columns with typed metadata.
 
-Images/audio/video are carried as ``binary`` columns with a metadata
-struct. The Spark-side plumbing — schema, partition-friendly metadata
-extraction, Arrow-batched UDF signatures, batch shapes — is real and
-tested; the actual codec step is stubbed (no image/audio libs in this
-environment) behind ``decode_stub`` with a deterministic fake, clearly
-marked.
-
-At scale: binary payloads live in their own column chunk (parquet stores
-them contiguously), metadata predicates prune without touching payload
-bytes, and decode runs as ``mapInPandas`` so each Arrow batch streams
-through Python once — no per-row serialization.
+``attach_binary`` wraps any binary (or castable) column into the
+canonical media shape ``(media_id, kind, payload, meta)``, where
+``meta`` holds the payload's size, MD5 and MIME type. It is pure Column
+expressions: parquet keeps the payload in its own column chunk, so
+predicates on ``meta`` prune without touching payload bytes. No codec
+decodes the payload.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("size_bytes", T.LongType(), True),
-                    T.StructField("sha", T.StringType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 
 def attach_binary(df: DataFrame, id_col: str, payload_col: str, kind: str = "image",
@@ -56,911 +27,4 @@ def attach_binary(df: DataFrame, id_col: str, payload_col: str, kind: str = "ima
             F.md5(payload).alias("sha"),
             F.lit(mime).alias("mime"),
         ).alias("meta"),
-    )
-
-
-FEATURE_DIM = 8
-
-_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-    ]
-)
-
-# header-codec format ids for the feature vector
-_FMT_IDS = {"png": 1.0, "gif": 2.0, "jpeg": 3.0, "bmp": 4.0,
-            "wav": 5.0, "mp4": 6.0}
-
-
-def parse_image_header(payload: bytes | None) -> tuple[str, int, int] | None:
-    """(format, width, height) from raw image bytes — pure struct-unpack,
-    no image library. Real codec work for the container formats whose
-    dimensions live in fixed header fields:
-
-    - PNG: 8-byte signature, then the IHDR chunk — width/height are
-      big-endian uint32 at offsets 16/20.
-    - GIF: "GIF87a"/"GIF89a", logical-screen width/height little-endian
-      uint16 at offsets 6/8.
-    - JPEG: walk the segment list for a start-of-frame marker
-      (SOF0/1/2/...) — height/width big-endian uint16 after the
-      precision byte.
-    - BMP: "BM", width/height little-endian int32 at offsets 18/22.
-
-    Returns None for anything unrecognized or truncated.
-    """
-    import struct
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24 and b[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", b[16:24])
-        return ("png", w, h)
-    if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-        w, h = struct.unpack("<HH", b[6:10])
-        return ("gif", w, h)
-    if b[:2] == b"\xff\xd8":
-        i = 2
-        while i + 9 <= len(b):
-            if b[i] != 0xFF:
-                return None
-            marker = b[i + 1]
-            if marker == 0xFF:
-                i += 1  # fill byte (ISO 10918-1 B.1.1.2): skip to marker
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers carry no length
-                continue
-            (seg_len,) = struct.unpack(">H", b[i + 2 : i + 4])
-            # SOFn markers hold the frame dims; C4/C8/CC are not SOF
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 > len(b):
-                    return None
-                h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                return ("jpeg", w, h)
-            i += 2 + seg_len
-        return None
-    if b[:2] == b"BM" and len(b) >= 26:
-        w, h = struct.unpack("<ii", b[18:26])
-        return ("bmp", w, abs(h))  # negative height = top-down DIB
-    return None
-
-
-def parse_audio_header(payload: bytes | None) -> tuple[str, int, int, int, float] | None:
-    """(format, sample_rate, channels, bits_per_sample, duration_s) from
-    raw WAV/RIFF bytes — pure struct-unpack, no audio library.
-
-    RIFF layout: "RIFF" + u32le riff_size + "WAVE", then a chunk list of
-    [4-byte id, u32le size, payload (padded to even)]. The "fmt " chunk
-    carries channels/sample_rate/byte_rate/bits; the "data" chunk size
-    divided by byte_rate gives the duration. Total on arbitrary bytes:
-    returns None for anything unrecognized or truncated (fuzz-tested).
-    """
-    import struct
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        return None
-    rate = channels = bits = byte_rate = None
-    data_size = None
-    i = 12
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        (size,) = struct.unpack("<I", b[i + 4 : i + 8])
-        if cid == b"fmt " and i + 8 + 16 <= len(b) and size >= 16:
-            _, channels, rate, byte_rate, _, bits = struct.unpack(
-                "<HHIIHH", b[i + 8 : i + 24]
-            )
-        elif cid == b"data":
-            data_size = size
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if rate is None or data_size is None:
-        return None
-    dur = data_size / byte_rate if byte_rate else 0.0
-    return ("wav", rate, channels, bits, round(dur, 6))
-
-
-def _walk_mp4_boxes(b: bytes, start: int, end: int):
-    """Yield (box_type, payload_start, payload_end) for ISO BMFF boxes in
-    b[start:end]; stops (rather than raises) on any malformed length."""
-    import struct
-
-    i = start
-    while i + 8 <= end:
-        (size,) = struct.unpack(">I", b[i : i + 4])
-        btype = b[i + 4 : i + 8]
-        payload = i + 8
-        if size == 1:  # 64-bit largesize follows the type
-            if i + 16 > end:
-                return
-            (size,) = struct.unpack(">Q", b[i + 8 : i + 16])
-            payload = i + 16
-        elif size == 0:  # box extends to end of enclosing container
-            size = end - i
-        if size < payload - i or i + size > end:
-            return
-        yield btype, payload, i + size
-        i += size
-
-
-def parse_video_header(payload: bytes | None) -> tuple[str, int, int, float] | None:
-    """(format, width, height, duration_s) from raw MP4/ISO-BMFF bytes —
-    pure struct-unpack, no video library.
-
-    Walks the top-level box list for "moov"; duration/timescale come from
-    its "mvhd" child (version 0: u32 pair at payload offset 12; version
-    1: timescale u32 at 20, duration u64 at 24), width/height from the
-    first "trak"/"tkhd" with nonzero dims (16.16 fixed-point at payload
-    offset 76/80, +12 for version 1). Total on arbitrary bytes: returns
-    None for anything unrecognized or truncated (fuzz-tested).
-    """
-    import struct
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if len(b) < 12 or b[4:8] != b"ftyp":
-        return None
-    dur_s = None
-    width = height = None
-    for btype, ps, pe in _walk_mp4_boxes(b, 0, len(b)):
-        if btype != b"moov":
-            continue
-        for ctype, cs, ce in _walk_mp4_boxes(b, ps, pe):
-            if ctype == b"mvhd" and dur_s is None:
-                if cs + 4 > ce:
-                    continue
-                version = b[cs]
-                if version == 0 and cs + 20 <= ce:
-                    ts, dur = struct.unpack(">II", b[cs + 12 : cs + 20])
-                elif version == 1 and cs + 32 <= ce:
-                    (ts,) = struct.unpack(">I", b[cs + 20 : cs + 24])
-                    (dur,) = struct.unpack(">Q", b[cs + 24 : cs + 32])
-                else:
-                    continue
-                if ts:
-                    dur_s = round(dur / ts, 6)
-            elif ctype == b"trak" and width is None:
-                for ttype, ts_, te in _walk_mp4_boxes(b, cs, ce):
-                    if ttype != b"tkhd":
-                        continue
-                    version = b[ts_] if ts_ < te else None
-                    off = ts_ + (88 if version == 1 else 76)
-                    if version in (0, 1) and off + 8 <= te:
-                        w_fp, h_fp = struct.unpack(">II", b[off : off + 8])
-                        if w_fp and h_fp:
-                            width, height = w_fp >> 16, h_fp >> 16
-                    break
-    if dur_s is None and width is None:
-        return None
-    return ("mp4", width or 0, height or 0, dur_s if dur_s is not None else 0.0)
-
-
-def _find_box(b: bytes, start: int, end: int, path: tuple[bytes, ...]):
-    """(payload_start, payload_end) of the first box at ``path`` (e.g.
-    (b"moov", b"trak", b"mdia")) or None."""
-    if not path:
-        return start, end
-    for btype, ps, pe in _walk_mp4_boxes(b, start, end):
-        if btype == path[0]:
-            got = _find_box(b, ps, pe, path[1:])
-            if got is not None:
-                return got
-    return None
-
-
-def decode_mjpeg_frames(payload: bytes | None, max_frames: int = 8):
-    """List of HxWx3 uint8 RGB frames for an MJPEG-in-MP4 container —
-    the one REAL video-frame path (round-8): each video sample of an
-    'mjpa'/'mjpb'/'jpeg' track is a complete baseline JPEG, decoded by
-    the pure-Python T.81 decoder (ops/jpeg.py). Returns None when the
-    container has no MJPEG video track (e.g. AVC — honestly out of
-    scope for pure Python) or is malformed; frames the JPEG decoder
-    rejects are skipped.
-
-    Sample locations come from the track's real sample tables: stsz
-    (sizes), stco/co64 (chunk offsets), stsc (sample→chunk runs) —
-    the same walk any demuxer does, pure struct over the box tree.
-    """
-    import struct
-
-    from .jpeg import decode_jpeg
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if len(b) < 12 or b[4:8] != b"ftyp":
-        return None
-    moov = _find_box(b, 0, len(b), (b"moov",))
-    if moov is None:
-        return None
-    try:
-        for ttype, ts_, te in _walk_mp4_boxes(b, *moov):
-            if ttype != b"trak":
-                continue
-            stbl = _find_box(b, ts_, te, (b"mdia", b"minf", b"stbl"))
-            if stbl is None:
-                continue
-            boxes = {t: (s, e) for t, s, e in _walk_mp4_boxes(b, *stbl)}
-            if b"stsd" not in boxes or b"stsz" not in boxes or b"stsc" not in boxes:
-                continue
-            ss, se = boxes[b"stsd"]
-            # stsd: ver/flags u32, entry_count u32, then sample entries
-            # (size u32, format fourcc)
-            if se - ss < 16:
-                continue
-            fourcc = b[ss + 12 : ss + 16]
-            if fourcc not in (b"mjpa", b"mjpb", b"jpeg", b"MJPG"):
-                continue
-            zs, ze = boxes[b"stsz"]
-            sample_size, n_samples = struct.unpack(">II", b[zs + 4 : zs + 12])
-            if sample_size:
-                sizes = [sample_size] * n_samples
-            else:
-                sizes = list(
-                    struct.unpack(f">{n_samples}I", b[zs + 12 : zs + 12 + 4 * n_samples])
-                )
-            if b"stco" in boxes:
-                cs, ce = boxes[b"stco"]
-                (n_chunks,) = struct.unpack(">I", b[cs + 4 : cs + 8])
-                offsets = list(
-                    struct.unpack(f">{n_chunks}I", b[cs + 8 : cs + 8 + 4 * n_chunks])
-                )
-            elif b"co64" in boxes:
-                cs, ce = boxes[b"co64"]
-                (n_chunks,) = struct.unpack(">I", b[cs + 4 : cs + 8])
-                offsets = list(
-                    struct.unpack(f">{n_chunks}Q", b[cs + 8 : cs + 8 + 8 * n_chunks])
-                )
-            else:
-                continue
-            cs, ce = boxes[b"stsc"]
-            (n_runs,) = struct.unpack(">I", b[cs + 4 : cs + 8])
-            runs = [
-                struct.unpack(">III", b[cs + 8 + 12 * i : cs + 20 + 12 * i])
-                for i in range(n_runs)
-            ]  # (first_chunk 1-based, samples_per_chunk, desc_id)
-            # expand sample → absolute offset
-            frames = []
-            sample = 0
-            for ri, (first, per, _desc) in enumerate(runs):
-                last = runs[ri + 1][0] - 1 if ri + 1 < len(runs) else len(offsets)
-                for chunk in range(first, last + 1):
-                    off = offsets[chunk - 1]
-                    for _ in range(per):
-                        if sample >= len(sizes) or len(frames) >= max_frames:
-                            break
-                        size = sizes[sample]
-                        f = decode_jpeg(b[off : off + size])
-                        if f is not None:
-                            frames.append(f)
-                        off += size
-                        sample += 1
-            return frames or None
-    except Exception:
-        return None
-    return None
-
-
-def header_features(
-    payload: bytes | None, kind: str = "image"
-) -> tuple[list[float] | None, bool]:
-    """FEATURE_DIM floats from the parsed header, dispatched on ``kind``:
-
-    - image: [fmt_id, width, height, aspect, log2(size), 0...]
-    - audio: [fmt_id, sample_rate, channels, bits, duration_s, log2(size), 0...]
-    - video: [fmt_id, width, height, aspect, duration_s, log2(size), 0...]
-
-    decode_ok=False (features None) when the header doesn't parse or the
-    kind is unknown."""
-    import math
-
-    vec: list[float] | None = None
-    if kind == "image":
-        hdr = parse_image_header(payload)
-        if hdr is not None:
-            fmt, w, h = hdr
-            vec = [
-                _FMT_IDS[fmt],
-                float(w),
-                float(h),
-                float(w) / float(h) if h else 0.0,
-                math.log2(len(payload)),
-            ]
-    elif kind == "audio":
-        ahdr = parse_audio_header(payload)
-        if ahdr is not None:
-            fmt, rate, channels, bits, dur = ahdr
-            vec = [
-                _FMT_IDS[fmt],
-                float(rate),
-                float(channels),
-                float(bits),
-                float(dur),
-                math.log2(len(payload)),
-            ]
-    elif kind == "video":
-        vhdr = parse_video_header(payload)
-        if vhdr is not None:
-            fmt, w, h, dur = vhdr
-            vec = [
-                _FMT_IDS[fmt],
-                float(w),
-                float(h),
-                float(w) / float(h) if h else 0.0,
-                float(dur),
-                math.log2(len(payload)),
-            ]
-    if vec is None:
-        return None, False
-    return vec + [0.0] * (FEATURE_DIM - len(vec)), True
-
-
-def extract_features(media: DataFrame, real_codec: bool = False) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow-batched).
-
-    ``real_codec=True`` runs the pure-Python header codecs, dispatched on
-    the row's ``kind``: image headers (``parse_image_header``,
-    PNG/GIF/JPEG/BMP dims), audio (``parse_audio_header``, WAV/RIFF
-    sample rate/channels/bits/duration) and video (``parse_video_header``,
-    MP4 mvhd duration + tkhd dims) — real metadata from fixed header
-    fields, no media library needed; rows whose payload doesn't parse
-    come back decode_ok=False. Full pixel/sample decode (which WOULD need
-    PIL/ffmpeg, absent in this container) is not attempted.
-    The default uses ``decode_stub``: a deterministic fake deriving
-    FEATURE_DIM floats from the payload bytes, keeping the batch shape,
-    schema, and partitioning behavior identical to a real decoder.
-    """
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if real_codec:
-                feats, oks = [], []
-                for p, kind in zip(pdf["payload"], pdf["kind"]):
-                    f, ok = header_features(p, kind)
-                    feats.append(f)
-                    oks.append(ok)
-            else:
-                feats = [decode_stub(p) for p in pdf["payload"]]
-                oks = [p is not None for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "feature": feats, "decode_ok": oks}
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        _batches, _FEATURE_SCHEMA
-    )
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("size_bytes", T.LongType(), True),
-                    T.StructField("sha", T.StringType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-    ]
-)
-
-
-def resize(media: DataFrame, width: int, height: int,
-           real_codec: bool = False) -> DataFrame:
-    """Image resize over mapInPandas (Arrow-batched).
-
-    ``real_codec=True``: 24-bit BMP, 8-bit PNG, and JPEG (baseline
-    SOF0 or progressive SOF2) payloads are REALLY decoded,
-    nearest-neighbor resampled, and re-encoded in their own format
-    (``resize_nearest_bmp24`` — pure struct+numpy; ``ops.png`` —
-    stdlib-zlib DEFLATE + scanline unfiltering; ``ops.jpeg`` — a full
-    pure-Python T.81 Huffman/DCT codec); payloads no codec can decode
-    fall back to the stub. The stub (also the ``real_codec=False``
-    path) deterministically truncates/pads the payload to width*height
-    bytes so the batch shape, output schema, and metadata recomputation
-    stay exercised for formats whose decoders genuinely need absent
-    libraries (AVC video frames — PIL/opencv/ffmpeg not in this
-    container).
-    """
-    import hashlib
-
-    from .gif import resize_nearest_gif
-    from .jpeg import resize_nearest_jpeg
-    from .png import resize_nearest_png
-
-    def _resize_stub(p: bytes | None) -> bytes | None:
-        if p is None:
-            return None
-        return bytes(p[: width * height]).ljust(width * height, b"\0")
-
-    def _one(p: bytes | None) -> bytes | None:
-        if real_codec:
-            for codec in (resize_nearest_bmp24, resize_nearest_png,
-                          resize_nearest_jpeg, resize_nearest_gif):
-                out = codec(p, width, height)
-                if out is not None:
-                    return out
-        return _resize_stub(p)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = [_one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": out,
-                    "meta": [
-                        None
-                        if p is None
-                        else {
-                            "size_bytes": len(p),
-                            "sha": hashlib.md5(p).hexdigest(),
-                            "mime": "application/octet-stream",
-                        }
-                        for p in out
-                    ],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(_batches, _RESIZE_SCHEMA)
-
-
-_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 16, max_frames: int = 8,
-                 real_codec: bool = False) -> DataFrame:
-    """Video/animation frame sampling over mapInPandas — 1 row in, N
-    frame rows out.
-
-    ``real_codec=True``: animated GIFs are REALLY decoded — each
-    composited frame (ops/gif.py: full LZW + canvas compositing) is
-    re-encoded as a lossless PNG and emitted as its own row, up to
-    ``max_frames`` — and so are MJPEG-in-MP4 containers: each video
-    sample decodes through the pure-Python baseline JPEG decoder
-    (``decode_mjpeg_frames``), covering one real VIDEO codec
-    end-to-end. Payloads neither codec handles fall back to the stub,
-    which slices the payload every ``every_n_bytes`` — an honest
-    placeholder for codecs whose frame decode needs absent libraries
-    (H.264/ffmpeg), keeping the fan-out shape (one input row → up to
-    ``max_frames`` output rows inside the same Arrow batch) and schema
-    exercised end-to-end either way.
-    """
-    from .gif import decode_gif_frames
-    from .png import encode_png
-
-    def _rows(mid, p):
-        if p is None:
-            return
-        if real_codec:
-            frames = decode_gif_frames(p, max_frames=max_frames)
-            if frames is None:
-                frames = decode_mjpeg_frames(p, max_frames=max_frames)
-            if frames is not None:
-                for k, f in enumerate(frames):
-                    yield mid, k, encode_png(f)
-                return
-        for k in range(min(max_frames, max(1, len(p) // every_n_bytes))):
-            yield mid, k, bytes(p[k * every_n_bytes : (k + 1) * every_n_bytes])
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for rid, ridx, rframe in _rows(mid, p):
-                    ids.append(rid)
-                    idxs.append(ridx)
-                    frames.append(rframe)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return media.select("media_id", "payload").mapInPandas(_batches, _FRAME_SCHEMA)
-
-
-def decode_stub(payload: bytes | None) -> list[float] | None:
-    """STUB codec: deterministic fake features from the first bytes.
-
-    Stands in for image-decode/resize/frame-sample; replace with a real
-    codec where libraries exist.
-    """
-    if payload is None:
-        return None
-    buf = bytes(payload[:FEATURE_DIM]).ljust(FEATURE_DIM, b"\0")
-    return [b / 255.0 for b in buf]
-
-
-# ---------------------------------------------------------------- BMP codec
-# REAL pixel codec for one format: uncompressed 24-bit BMP (BI_RGB) is
-# fully decodable with struct + numpy — no image library needed. The
-# PNG/GIF/JPEG entropy-coded formats have their own real pure-Python
-# codecs in ops/{png,gif,jpeg}.py; the stub remains only for payloads
-# none of them recognize.
-
-
-def decode_bmp24(payload: bytes | None):
-    """(height x width x 3 uint8 BGR array) for an uncompressed 24-bit
-    bottom-up BMP; None for anything else (other depths, compression,
-    top-down, truncation)."""
-    import struct
-
-    import numpy as np
-
-    if not payload:
-        return None
-    b = bytes(payload)
-    if len(b) < 54 or b[:2] != b"BM":
-        return None
-    data_off = struct.unpack("<I", b[10:14])[0]
-    hdr_size, w, h = struct.unpack("<Iii", b[14:26])
-    planes, bpp = struct.unpack("<HH", b[26:30])
-    comp = struct.unpack("<I", b[30:34])[0]
-    if hdr_size < 40 or planes != 1 or bpp != 24 or comp != 0 or w <= 0 or h <= 0:
-        return None
-    stride = (w * 3 + 3) & ~3
-    need = data_off + stride * h
-    if len(b) < need:
-        return None
-    rows = np.frombuffer(b, dtype=np.uint8, count=stride * h, offset=data_off)
-    rows = rows.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    return rows[::-1].copy()  # bottom-up → top-down
-
-
-def encode_bmp24(arr) -> bytes:
-    """Inverse of decode_bmp24: uint8 HxWx3 BGR → uncompressed BMP."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = arr.shape
-    stride = (w * 3 + 3) & ~3
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * 3] = arr[::-1].reshape(h, w * 3)
-    data = body.tobytes()
-    file_size = 54 + len(data)
-    return (
-        b"BM"
-        + struct.pack("<IHHI", file_size, 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-        + data
-    )
-
-
-def resize_nearest_bmp24(payload: bytes | None, width: int, height: int) -> bytes | None:
-    """Nearest-neighbor resample of a 24-bit BMP; None if not decodable."""
-    import numpy as np
-
-    arr = decode_bmp24(payload)
-    if arr is None:
-        return None
-    h, w, _ = arr.shape
-    yi = (np.arange(height) * h // height).clip(0, h - 1)
-    xi = (np.arange(width) * w // width).clip(0, w - 1)
-    return encode_bmp24(arr[yi][:, xi])
-
-
-def decode_pixels(payload: bytes | None):
-    """HxWx3 uint8 RGB via whichever real codec recognizes the payload
-    (24-bit BMP, PNG, GIF, baseline or progressive JPEG); None
-    otherwise. The one dispatch point for pixel-level ops."""
-    from .gif import decode_gif
-    from .jpeg import decode_jpeg
-    from .png import decode_png
-
-    arr = decode_bmp24(payload)
-    if arr is not None:
-        return arr[..., ::-1]  # BMP decodes BGR; normalize to RGB
-    arr = decode_png(payload)
-    if arr is not None:
-        return arr
-    arr = decode_gif(payload)
-    if arr is not None:
-        return arr
-    return decode_jpeg(payload)
-
-
-def pixel_feature_vec(payload: bytes | None) -> list[float] | None:
-    """FEATURE_DIM floats computed from REAL pixels:
-    [mean R, mean G, mean B, std(luma), mean(luma), edge_energy,
-    aspect, log2(n_pixels)] — None when no codec decodes the payload.
-    Deterministic numpy; numpy-reference-tested."""
-    import math
-
-    import numpy as np
-
-    arr = decode_pixels(payload)
-    if arr is None:
-        return None
-    f = arr.astype(np.float64)
-    luma = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-    h, w = luma.shape
-    # mean absolute horizontal gradient — a cheap sharpness/edge proxy
-    edge = float(np.abs(np.diff(luma, axis=1)).mean()) if w > 1 else 0.0
-    vec = [
-        float(f[..., 0].mean()),
-        float(f[..., 1].mean()),
-        float(f[..., 2].mean()),
-        float(luma.std()),
-        float(luma.mean()),
-        edge,
-        float(w) / float(h) if h else 0.0,
-        math.log2(float(h * w)) if h * w else 0.0,
-    ]
-    return vec[:FEATURE_DIM] + [0.0] * (FEATURE_DIM - len(vec))
-
-
-def pixel_features(media: DataFrame) -> DataFrame:
-    """(media_id, feature, decode_ok) with features computed from REAL
-    decoded pixels (BMP/PNG/baseline-JPEG — see ``decode_pixels``);
-    payloads no codec decodes come back decode_ok=False. Arrow-batched
-    ``mapInPandas`` like every multimodal op — the Python codec runs
-    per-row inside the batch, the plan stays a single map stage."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [pixel_feature_vec(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "feature": feats,
-                    "decode_ok": [v is not None for v in feats],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batches, _FEATURE_SCHEMA
-    )
-
-
-def decode_wav_pcm(payload: bytes | None):
-    """(samples float64 [-1, 1] mono-mixed, sample_rate) for PCM WAV
-    (8/16/32-bit integer); None otherwise. Pure struct+numpy — WAV PCM
-    needs no audio library."""
-    import struct
-
-    import numpy as np
-
-    hdr = parse_audio_header(payload)
-    if hdr is None:
-        return None
-    _, rate, channels, bits, _ = hdr
-    if not rate or not channels or bits not in (8, 16, 32):
-        return None
-    b = bytes(payload)
-    i = 12
-    data = None
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        (size,) = struct.unpack("<I", b[i + 4 : i + 8])
-        if cid == b"data":
-            data = b[i + 8 : i + 8 + size]
-            break
-        i += 8 + size + (size & 1)
-    if data is None:
-        return None
-    dt = {8: np.uint8, 16: np.int16, 32: np.int32}[bits]
-    width = np.dtype(dt).itemsize
-    n = len(data) // (width * channels) * channels
-    if n == 0:
-        return None
-    x = np.frombuffer(data, dtype=dt, count=n).astype(np.float64)
-    if bits == 8:  # 8-bit WAV is unsigned, midpoint 128
-        x = (x - 128.0) / 128.0
-    else:
-        x = x / float(1 << (bits - 1))
-    return x.reshape(-1, channels).mean(axis=1), rate
-
-
-def audio_feature_vec(payload: bytes | None) -> list[float] | None:
-    """FEATURE_DIM floats from REAL decoded PCM samples:
-    [rms, zero_crossing_rate, dominant_freq_hz, spectral_centroid_hz,
-    peak_abs, duration_s, sample_rate, log2(n_samples)] — None when the
-    payload isn't decodable PCM WAV. Deterministic numpy (rfft)."""
-    import math
-
-    import numpy as np
-
-    dec = decode_wav_pcm(payload)
-    if dec is None:
-        return None
-    x, rate = dec
-    n = len(x)
-    rms = float(np.sqrt((x * x).mean()))
-    zcr = float((np.signbit(x[1:]) != np.signbit(x[:-1])).mean()) if n > 1 else 0.0
-    mag = np.abs(np.fft.rfft(x))
-    freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-    if len(mag) > 1:
-        dom = float(freqs[1:][mag[1:].argmax()])  # skip DC
-        centroid = float((freqs * mag).sum() / mag.sum()) if mag.sum() else 0.0
-    else:
-        dom = centroid = 0.0
-    vec = [
-        rms,
-        zcr,
-        dom,
-        centroid,
-        float(np.abs(x).max()),
-        n / rate,
-        float(rate),
-        math.log2(n) if n else 0.0,
-    ]
-    return vec[:FEATURE_DIM] + [0.0] * (FEATURE_DIM - len(vec))
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """(media_id, feature, decode_ok) from REAL decoded PCM WAV samples
-    (``audio_feature_vec``); non-PCM payloads come back decode_ok=False.
-    Arrow-batched ``mapInPandas``, single map stage."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [audio_feature_vec(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "feature": feats,
-                    "decode_ok": [v is not None for v in feats],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batches, _FEATURE_SCHEMA
-    )
-
-
-def dhash64(payload: bytes | None) -> int | None:
-    """64-bit difference hash (dHash) from REAL decoded pixels: luma is
-    box-averaged onto a 9x8 grid and bit (r, c) is set iff
-    grid[r, c] > grid[r, c+1] — the standard perceptual hash for
-    near-duplicate IMAGE detection (robust to re-encoding, scaling and
-    small edits; Hamming distance ≈ perceptual difference). Returns a
-    SIGNED 64-bit int (Spark long two's complement); None when no codec
-    decodes the payload."""
-    import numpy as np
-
-    arr = decode_pixels(payload)
-    if arr is None:
-        return None
-    f = arr.astype(np.float64)
-    luma = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-    h, w = luma.shape
-    # box-average onto 8 rows x 9 cols: split indices evenly (bins may
-    # differ by one source pixel; deterministic)
-    row_bins = np.array_split(np.arange(h), 8)
-    col_bins = np.array_split(np.arange(w), 9)
-    grid = np.empty((8, 9))
-    for ri, rb in enumerate(row_bins):
-        for ci, cb in enumerate(col_bins):
-            block = luma[rb[0] : rb[-1] + 1, cb[0] : cb[-1] + 1]
-            grid[ri, ci] = block.mean() if block.size else 0.0
-    bits = (grid[:, :-1] > grid[:, 1:]).flatten()
-    v = 0
-    for i, b in enumerate(bits):
-        if b:
-            v |= 1 << i
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-_DHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("dhash", T.LongType(), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-    ]
-)
-
-
-def perceptual_hashes(media: DataFrame) -> DataFrame:
-    """(media_id, dhash, decode_ok) — Arrow-batched ``mapInPandas`` over
-    the payload column like every multimodal op; one map stage, the
-    Python codec runs per row inside the batch."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hs = [dhash64(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dhash": pd.array(hs, dtype="Int64"),
-                    "decode_ok": [v is not None for v in hs],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _batches, _DHASH_SCHEMA
-    )
-
-
-def image_near_duplicates(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate IMAGE pairs: dHash the decodable payloads, then
-    banded Hamming blocking (``dedup.hamming_near_pairs`` — pigeonhole-
-    guaranteed recall, grid-salted band join). Returns
-    (id_a, id_b, hamming) with id_a < id_b. The hash pass is one map
-    stage over the binary column; the pair search never compares images
-    pixel-to-pixel."""
-    from . import dedup
-
-    hashes = perceptual_hashes(media).where(F.col("decode_ok"))
-    return dedup.hamming_near_pairs(
-        hashes, "media_id", "dhash", bits=64, max_hamming=max_hamming
-    )
-
-
-def audio_fingerprint64(payload: bytes | None) -> int | None:
-    """64-bit energy-delta fingerprint from REAL decoded PCM: samples are
-    split into 65 equal frames and bit i is set iff RMS(frame i+1) >
-    RMS(frame i) — the energy-difference idea behind audio fingerprint
-    systems, duration-invariant (frames are relative) and robust to
-    volume scaling (comparisons, not magnitudes). Returns a SIGNED
-    64-bit int; None when the payload is not decodable PCM WAV."""
-    import numpy as np
-
-    dec = decode_wav_pcm(payload)
-    if dec is None:
-        return None
-    samples, _ = dec
-    if samples.size < 65:
-        return None
-    frames = np.array_split(samples, 65)
-    rms = np.array([float(np.sqrt(np.mean(f * f))) for f in frames])
-    bits = rms[1:] > rms[:-1]
-    v = 0
-    for i, b in enumerate(bits):
-        if b:
-            v |= 1 << i
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """(media_id, fp, decode_ok) — Arrow-batched like every multimodal
-    op."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("fp", T.LongType(), True),
-            T.StructField("decode_ok", T.BooleanType(), False),
-        ]
-    )
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hs = [audio_fingerprint64(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "fp": pd.array(hs, dtype="Int64"),
-                    "decode_ok": [v is not None for v in hs],
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(_batches, schema)
-
-
-def audio_near_duplicates(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate AUDIO pairs via the energy fingerprint + the same
-    banded-Hamming blocking as images (``dedup.hamming_near_pairs``).
-    Returns (id_a, id_b, hamming), id_a < id_b."""
-    from . import dedup
-
-    fps = audio_fingerprints(media).where(F.col("decode_ok"))
-    return dedup.hamming_near_pairs(
-        fps, "media_id", "fp", bits=64, max_hamming=max_hamming
     )

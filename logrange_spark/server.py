@@ -217,13 +217,19 @@ def write_batch(engine, req: dict) -> dict:
 
         fields = parse_tags(fields) if fields else None
     events = []
-    for ev in req.get("events") or []:
+    for i, ev in enumerate(req.get("events") or []):
         if isinstance(ev, dict):
             events.append(
                 (ev.get("timestamp"), ev.get("message", ""), ev.get("fields") or {})
             )
-        else:
+        elif isinstance(ev, list) and len(ev) in (2, 3):
             events.append(tuple(ev))
+        else:
+            raise ApiError(
+                400,
+                f"event {i}: expected an object or a [ts, msg] / "
+                f"[ts, msg, fields] list, got {type(ev).__name__}",
+            )
     try:
         res = engine.write(tags, events, fields=fields)
     except Exception as e:

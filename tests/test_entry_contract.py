@@ -249,3 +249,77 @@ def test_contamination_oracle(spark):
     by_id = {r[0]: r for r in s_rows}
     bench_ids = [i for i in by_id if i % 97 == 0 and by_id[i][1] > 0]
     assert bench_ids and all(by_id[i][3] == 1.0 for i in bench_ids)
+
+
+def _alpha_words(prefix: str, n: int) -> list[str]:
+    """``n`` distinct all-letter words (base-26 suffixes) for hand-built
+    documents that must pass the alpha-word and word-length gates."""
+    out = []
+    for i in range(n):
+        s, k = "", i
+        for _ in range(3):
+            s, k = chr(ord("a") + k % 26) + s, k // 26
+        out.append(prefix + s)
+    return out
+
+
+def test_cc_pipeline_drops_doc_emptied_by_span_removal(spark, tmp_path):
+    """A document that MinHash keeps but repeated-span removal empties
+    has no tokens, hence no perplexity and no place in a training
+    shard: the DuckDB twin (no per-doc LM row for it) and the Spark
+    pipeline must both drop it. Doc 2's whole body is the tail of doc
+    1's body, so doc 1 (lower id) keeps the span and doc 2 is emptied;
+    their token Jaccard (~0.5) stays under the MinHash threshold."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    span = " ".join(["the"] + _alpha_words("span", 31))
+    texts = {
+        1: " ".join(_alpha_words("head", 30)) + " " + span,
+        2: span,
+        97: " ".join(["the"] + _alpha_words("bench", 34)),
+    }
+    for d in (4, 6, 7, 8, 11):
+        texts[d] = " ".join(["the"] + _alpha_words(f"doc{chr(ord('a') + d)}", 36))
+    ids = sorted(texts)
+    pq.write_table(
+        pa.table({"doc_id": ids, "text": [texts[i] for i in ids]}),
+        str(tmp_path / "documents.parquet"),
+    )
+
+    s_df = entry._q_cc_pipeline(spark, str(tmp_path))
+    s_rows = sorted(tuple(r) for r in s_df.collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    res = con.execute(entry._cc_pipeline_sql())
+    assert [d[0] for d in res.description] == s_df.columns
+    d_rows = sorted(tuple(r) for r in res.fetchall())
+    assert s_rows == d_rows
+    kept = {r[0] for r in s_rows}
+    assert 1 in kept and 2 not in kept
+
+
+def test_cc_url_keep_best_ignores_null_doc_id(spark):
+    """URL keep-best keeps the min doc_id per canonical URL. A record id
+    with no digits parses to a null doc_id; it must not outrank the real
+    keeper of its URL (a NULLS FIRST ordering would rank it first)."""
+    recs = spark.createDataFrame(
+        [
+            (None, "http://www.cc.example/page/5?utm_source=x", b"n"),
+            (5, "http://cc.example/page/5", b"a"),
+            (9, "https://cc.example/page/5/", b"b"),
+            (7, "http://cc.example/page/7", b"c"),
+            (None, "  ", b"d"),
+        ],
+        "doc_id long, url string, payload binary",
+    )
+    got = sorted(
+        (r["doc_id"] is None, r["doc_id"], bytes(r["payload"]))
+        for r in entry._cc_url_keep_best(recs).collect()
+    )
+    # the blank-url record is its own keeper (url_dedup's auto-keep);
+    # page/5 keeps doc 5, not the null-id refetch
+    assert got == [(False, 5, b"a"), (False, 7, b"c"), (True, None, b"d")]

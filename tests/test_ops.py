@@ -1,4 +1,4 @@
-"""Training-data pipeline operator tests: dedup, ANN, text, multimodal."""
+"""Training-data pipeline operator tests: dedup, ANN, text, binary columns."""
 
 from __future__ import annotations
 
@@ -277,177 +277,6 @@ def test_multimodal_plumbing(docs):
     rows = {r["media_id"]: r for r in media.collect()}
     assert rows[1]["meta"]["size_bytes"] == len("the quick brown fox jumps over the lazy dog")
     assert rows[1]["meta"]["sha"] == rows[3]["meta"]["sha"]
-    feats = multimodal.extract_features(media)
-    frows = {r["media_id"]: r for r in feats.collect()}
-    assert len(frows[1]["feature"]) == multimodal.FEATURE_DIM
-    assert frows[1]["decode_ok"]
-    assert frows[1]["feature"] == frows[3]["feature"]
-
-
-def _png(w, h):
-    import struct
-
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">II", w, h)
-        + b"\x08\x02\x00\x00\x00"
-        + b"\x00" * 4  # crc, unchecked by the header codec
-    )
-
-
-def _gif(w, h):
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 6
-
-
-def _jpeg(w, h):
-    import struct
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 17)
-        + b"\x08"
-        + struct.pack(">HH", h, w)
-        + b"\x03" + b"\x00" * 9
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _bmp(w, h):
-    import struct
-
-    return b"BM" + b"\x00" * 16 + struct.pack("<ii", w, h) + b"\x00" * 4
-
-
-def test_parse_image_header_pure():
-    p = multimodal.parse_image_header
-    assert p(_png(640, 480)) == ("png", 640, 480)
-    assert p(_gif(320, 200)) == ("gif", 320, 200)
-    assert p(_jpeg(1024, 768)) == ("jpeg", 1024, 768)
-    assert p(_bmp(64, 32)) == ("bmp", 64, 32)
-    assert p(_bmp(64, -32)) == ("bmp", 64, 32)  # top-down DIB
-    assert p(None) is None
-    assert p(b"") is None
-    assert p(b"not an image at all") is None
-    assert p(b"\x89PNG\r\n\x1a\n1234") is None  # truncated
-    assert p(b"\xff\xd8\xff\xd9") is None  # JPEG with no SOF
-    # 0xFF fill bytes before a marker are spec-valid (B.1.1.2)
-    import struct
-    filled = (
-        b"\xff\xd8" + b"\xff\xff"  # two fill bytes
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 480, 640) + b"\x03" + b"\x00" * 9
-    )
-    assert p(filled) == ("jpeg", 640, 480)
-
-
-def _wav(rate=16000, channels=1, bits=16, n_samples=32000):
-    import struct
-
-    block = channels * bits // 8
-    data = b"\x00" * (n_samples * block)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block, block, bits)
-    body = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def _box(btype: bytes, payload: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-
-def _mp4(width=1920, height=1080, timescale=1000, duration=90_000, tkhd_v=0):
-    import struct
-
-    mvhd = b"\x00\x00\x00\x00" + b"\x00" * 8 + struct.pack(">II", timescale, duration) + b"\x00" * 80
-    pre = 76 if tkhd_v == 0 else 88
-    tkhd = bytes([tkhd_v]) + b"\x00" * (pre - 1) + struct.pack(
-        ">II", width << 16, height << 16
-    )
-    moov = _box(b"mvhd", mvhd) + _box(b"trak", _box(b"tkhd", tkhd))
-    return _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + _box(b"moov", moov)
-
-
-def test_parse_audio_header_wav():
-    p = multimodal.parse_audio_header
-    assert p(_wav(16000, 1, 16, 32000)) == ("wav", 16000, 1, 16, 2.0)
-    assert p(_wav(44100, 2, 16, 44100)) == ("wav", 44100, 2, 16, 1.0)
-    assert p(None) is None
-    assert p(b"") is None
-    assert p(b"RIFF\x00\x00\x00\x00AVI ") is None  # RIFF but not WAVE
-    assert p(_png(2, 2)) is None
-
-
-def test_parse_video_header_mp4():
-    p = multimodal.parse_video_header
-    assert p(_mp4(1920, 1080, 1000, 90_000)) == ("mp4", 1920, 1080, 90.0)
-    # version-1 tkhd (64-bit times) shifts the dims by 12 bytes
-    assert p(_mp4(640, 360, 600, 1200, tkhd_v=1)) == ("mp4", 640, 360, 2.0)
-    assert p(None) is None
-    assert p(b"") is None
-    assert p(b"\x00\x00\x00\x08free") is None  # no ftyp
-    assert p(_wav()) is None
-
-
-def test_multimodal_real_codec_audio_video_kinds(spark):
-    """extract_features(real_codec=True) dispatches on kind: WAV rows get
-    [fmt, rate, channels, bits, duration, ...], MP4 rows get
-    [fmt, w, h, aspect, duration, ...]; junk payloads decode_ok=False."""
-    audio = spark.createDataFrame(
-        [(1, _wav(16000, 2, 16, 16000)), (2, b"junk")],
-        "doc_id long, payload binary",
-    )
-    am = multimodal.attach_binary(audio, "doc_id", "payload", kind="audio")
-    arows = {r["media_id"]: r for r in
-             multimodal.extract_features(am, real_codec=True).collect()}
-    assert arows[1]["decode_ok"]
-    assert arows[1]["feature"][:5] == [5.0, 16000.0, 2.0, 16.0, 1.0]
-    assert not arows[2]["decode_ok"] and arows[2]["feature"] is None
-
-    video = spark.createDataFrame(
-        [(1, _mp4(1280, 720, 1000, 30_000)), (2, _wav())],
-        "doc_id long, payload binary",
-    )
-    vm = multimodal.attach_binary(video, "doc_id", "payload", kind="video")
-    vrows = {r["media_id"]: r for r in
-             multimodal.extract_features(vm, real_codec=True).collect()}
-    assert vrows[1]["decode_ok"]
-    fmt, w, h, aspect, dur = vrows[1]["feature"][:5]
-    assert (fmt, w, h, dur) == (6.0, 1280.0, 720.0, 30.0)
-    assert abs(aspect - 1280 / 720) < 1e-6
-    # a WAV payload under kind=video does not parse as MP4
-    assert not vrows[2]["decode_ok"]
-
-
-def test_multimodal_real_codec_reads_header_dims(spark):
-    """real_codec=True runs the struct-unpack header codec: actual
-    dimensions for image payloads, decode_ok=False for non-images
-    (round-4 task: replace the NotImplementedError stub)."""
-    rows = [
-        (1, _png(640, 480)),
-        (2, _gif(320, 200)),
-        (3, _jpeg(1024, 768)),
-        (4, b"plain text, not an image"),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    media = multimodal.attach_binary(df, "doc_id", "payload", kind="image")
-    out = {r["media_id"]: r for r in
-           multimodal.extract_features(media, real_codec=True).collect()}
-    # feature = [fmt_id, width, height, aspect, log2(size), 0, 0, 0]
-    assert out[1]["decode_ok"] and out[1]["feature"][1:3] == [640.0, 480.0]
-    assert out[2]["decode_ok"] and out[2]["feature"][1:3] == [320.0, 200.0]
-    assert out[3]["decode_ok"] and out[3]["feature"][1:3] == [1024.0, 768.0]
-    assert not out[4]["decode_ok"] and out[4]["feature"] is None
-    assert not out[5]["decode_ok"] and out[5]["feature"] is None
 
 
 def test_bpe_ish_tokens(spark):
@@ -661,25 +490,6 @@ def test_embedding_near_duplicates_multiprobe_no_dupes_and_superset(vectors):
         ).collect()
     }
     assert hi == lo
-
-
-def test_multimodal_resize_and_frames(docs):
-    media = multimodal.attach_binary(docs, "doc_id", "text", kind="image")
-    rs = {r["media_id"]: r for r in multimodal.resize(media, 4, 3).collect()}
-    assert all(len(r["payload"]) == 12 for r in rs.values())
-    assert all(r["meta"]["size_bytes"] == 12 for r in rs.values())
-    assert rs[1]["width"] == 4 and rs[1]["height"] == 3
-
-    fr = multimodal.frame_sample(media, every_n_bytes=8, max_frames=3).collect()
-    per = {}
-    for r in fr:
-        per.setdefault(r["media_id"], []).append(r)
-    assert all(len(v) <= 3 for v in per.values())
-    assert all(r["frame_idx"] < 3 and len(r["frame"]) <= 8 for r in fr)
-    # deterministic: same payload → same frames
-    f1 = sorted((r["frame_idx"], bytes(r["frame"])) for r in per[1])
-    f3 = sorted((r["frame_idx"], bytes(r["frame"])) for r in per[3])
-    assert f1 == f3
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -973,36 +783,6 @@ def test_redact_hand_cases(spark):
     assert "Exchange" not in plan and "BatchEvalPython" not in plan
 
 
-def test_bmp_resize_real_codec_end_to_end(spark):
-    """The BMP pixel path is REAL: a synthesized 24-bit BMP goes through
-    the Spark resize operator (mapInPandas) with real_codec=True and the
-    output decodes to the exact nearest-neighbor resample; non-BMP
-    payloads fall back to the deterministic stub without error."""
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
-    bmp = mm.encode_bmp24(arr)
-    rows = [(1, bmp), (2, b"not a bmp at all" * 4), (3, None)]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in mm.resize(media, 4, 3, real_codec=True).collect()}
-
-    got = mm.decode_bmp24(bytes(out[1]["payload"]))
-    yi = (np.arange(3) * 6 // 3).clip(0, 5)
-    xi = (np.arange(4) * 8 // 4).clip(0, 7)
-    assert got is not None and (got == arr[yi][:, xi]).all()
-    assert out[1]["width"] == 4 and out[1]["height"] == 3
-    # non-BMP fell back to the stub (truncate/pad to w*h)
-    assert len(out[2]["payload"]) == 4 * 3
-    assert out[3]["payload"] is None
-
-    # codec totality on hostile bytes
-    for junk in (b"", b"BM", b"BM" + bytes(60), bmp[:30], bmp[:-5], bytes(200)):
-        assert mm.resize_nearest_bmp24(junk, 2, 2) is None
-
-
 def test_pq_entry_points_validate_missing_corpus(spark):
     """corpus=None without precomputed artifacts must raise a clear
     ValueError, not AttributeError; pq_seed_codebooks must reject a
@@ -1105,309 +885,6 @@ def test_ann_default_nrows_reads_parquet_footers_not_a_count_job(
     assert ann._default_nrows(mem) == 50
 
 
-def test_jpeg_codec_roundtrip_matches_numpy_reference():
-    """The baseline JPEG codec is REAL: encode→decode at quant=1 differs
-    from the source pixels only by DCT rounding (±2); 4:2:0 subsampling
-    and restart markers decode correctly; quantization loss is bounded."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-
-    h, w = 37, 50
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.dstack(
-        [(xx * 255 / w), (yy * 255 / h), ((xx + yy) * 127 / (w + h))]
-    ).astype(np.uint8)
-    noise = np.random.default_rng(3).integers(0, 256, (16, 24, 3), dtype=np.uint8)
-
-    for src in (img, noise):
-        dec = jpeg.decode_jpeg(jpeg.encode_jpeg(src, quant=1))
-        assert dec is not None and dec.shape == src.shape
-        assert np.abs(dec.astype(int) - src.astype(int)).max() <= 2
-
-    # 4:2:0: chroma is 2x2-averaged, so only bounded loss — luma near-exact
-    dec420 = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quant=1, subsample=True))
-    assert dec420 is not None and dec420.shape == img.shape
-    assert np.abs(dec420.astype(int) - img.astype(int)).mean() < 4
-
-    # restart markers: byte-aligned RSTn resync + DC predictor reset
-    decr = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quant=1, restart_interval=3))
-    assert decr is not None
-    assert np.abs(decr.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_codec_total_on_hostile_bytes():
-    """decode_jpeg never raises: junk, truncations at every segment
-    boundary, bit-garbage entropy data, and progressive streams all
-    return None."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-
-    img = np.full((9, 13, 3), 77, dtype=np.uint8)
-    enc = jpeg.encode_jpeg(img)
-    for junk in (None, b"", b"\xff", b"\xff\xd8", bytes(64), b"\xff" * 64,
-                 bytes(reversed(enc))):
-        assert jpeg.decode_jpeg(junk) is None
-    for cut in range(0, len(enc), 7):
-        jpeg.decode_jpeg(enc[:cut])  # must not raise (None or partial-fail)
-    # a SOF2 header on a baseline full-band scan is MALFORMED progressive
-    # (a progressive DC scan must have Se=0) → rejected, not garbled
-    prog = enc.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert jpeg.decode_jpeg(prog) is None
-    # hostile-header allocation guard: a tiny payload declaring a
-    # 65500x65500 frame must return None IMMEDIATELY (pre-guard this
-    # allocated ~67M python lists — minutes of CPU — before any scan)
-    import struct as _struct
-    import time as _time
-
-    bomb = (b"\xff\xd8"
-            + _struct.pack(">HH", 0xFFC0, 17)
-            + _struct.pack(">BHHB", 8, 65500, 65500, 3)
-            + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1])
-            + b"\xff\xd9")
-    t0 = _time.time()
-    assert jpeg.decode_jpeg(bomb) is None
-    assert _time.time() - t0 < 1.0
-    # arithmetic-coded / lossless SOFs stay out of scope
-    assert jpeg.decode_jpeg(enc.replace(b"\xff\xc0", b"\xff\xc9", 1)) is None
-    assert jpeg.decode_jpeg(enc.replace(b"\xff\xc0", b"\xff\xc3", 1)) is None
-
-
-def test_jpeg_progressive_roundtrip_matches_numpy_reference():
-    """The SOF2 decoder is REAL: a full progressive stream (spectral
-    selection + successive approximation, T.81 G.1.2) reconstructs the
-    coefficients exactly at quant=1, so decode differs from the source
-    only by DCT rounding — same ±2 bound as the baseline codec. 4:2:0
-    subsampling (interleaved DC scan over a padded MCU grid +
-    non-interleaved AC scans over the component grid) and restart
-    markers (DC-pred and EOB-run reset per interval) also roundtrip."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-
-    h, w = 37, 50
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.dstack(
-        [(xx * 255 / w), (yy * 255 / h), ((xx + yy) * 127 / (w + h))]
-    ).astype(np.uint8)
-    noise = np.random.default_rng(5).integers(0, 256, (16, 24, 3), dtype=np.uint8)
-
-    for src in (img, noise):
-        dec = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(src, quant=1))
-        assert dec is not None and dec.shape == src.shape
-        assert np.abs(dec.astype(int) - src.astype(int)).max() <= 2
-
-    dec420 = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(img, quant=1, subsample=True))
-    assert dec420 is not None and np.abs(dec420.astype(int) - img.astype(int)).mean() < 4
-    decr = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(img, quant=1, restart_interval=3))
-    assert decr is not None and np.abs(decr.astype(int) - img.astype(int)).max() <= 2
-    # heavier quantization exercises long EOB runs + ZRL in refinement
-    decq = jpeg.decode_jpeg(jpeg.encode_jpeg_progressive(img, quant=8))
-    assert decq is not None and np.abs(decq.astype(int) - img.astype(int)).mean() < 4
-
-
-def test_jpeg_progressive_partial_scans_and_hostile_bytes():
-    """Progressive semantics: truncating the scan sequence (cut + EOI)
-    still decodes, with error decreasing as scans are added — the
-    coarse-to-fine contract browsers rely on. And the decoder stays
-    TOTAL under truncation and bit flips of a real SOF2 stream."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-
-    img = np.random.default_rng(11).integers(0, 256, (21, 33, 3), dtype=np.uint8)
-    enc = jpeg.encode_jpeg_progressive(img, quant=2)
-    offs = []
-    i = 0
-    while (j := enc.find(b"\xff\xda", i)) >= 0:
-        offs.append(j)
-        i = j + 2
-    assert len(offs) == 10
-    errs = []
-    for k in (1, 3, 5, 10):
-        part = (enc[: offs[k]] + b"\xff\xd9") if k < 10 else enc
-        dec = jpeg.decode_jpeg(part)
-        assert dec is not None and dec.shape == img.shape
-        errs.append(float(np.abs(dec.astype(int) - img.astype(int)).mean()))
-    assert errs[0] > errs[1] > errs[2] > errs[3]  # refinement converges
-    assert errs[3] <= 2.0  # full stream: DCT/quant rounding only
-    for cut in range(0, len(enc), 7):
-        jpeg.decode_jpeg(enc[:cut])  # must not raise
-    for pos in range(0, len(enc), 11):
-        bad = bytearray(enc)
-        bad[pos] ^= 0x55
-        jpeg.decode_jpeg(bytes(bad))  # must not raise
-
-
-def test_jpeg_resize_real_codec_matches_bmp_reference(spark):
-    """VERDICT round-6 item #4: the SAME pixel array goes through the
-    Spark resize operator twice — once as BMP (exact reference path),
-    once as a near-lossless baseline JPEG — and the two outputs agree
-    within codec rounding. Junk payloads still fall back to the stub."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-    from logrange_spark.ops import multimodal as mm
-
-    rng = np.random.default_rng(21)
-    arr = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-    bmp = mm.encode_bmp24(arr[..., ::-1])  # BMP codec is BGR
-    jpg = jpeg.encode_jpeg(arr, quant=1)
-    rows = [(1, bmp), (2, bytes(jpg)), (3, b"junk" * 10)]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {
-        r["media_id"]: r
-        for r in mm.resize(media, 8, 6, real_codec=True).collect()
-    }
-
-    ref = mm.decode_bmp24(bytes(out[1]["payload"]))[..., ::-1]  # BGR→RGB
-    got = jpeg.decode_jpeg(bytes(out[2]["payload"]))
-    assert got is not None and got.shape == ref.shape == (6, 8, 3)
-    # two near-lossless JPEG trips (decode + re-encode) vs exact BMP path
-    assert np.abs(got.astype(int) - ref.astype(int)).max() <= 4
-    assert len(out[3]["payload"]) == 8 * 6  # stub fallback intact
-
-
-def _png_with_filters(arr, filters):
-    """Build a valid PNG whose row y uses filters[y % len] — reference
-    filter computation straight from the PNG spec, so the decoder's
-    Sub/Up/Average/Paeth reconstruction is tested against ground truth."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, c = arr.shape
-    a = arr.astype(np.int32)
-    raw = bytearray()
-    for y in range(h):
-        f = filters[y % len(filters)]
-        row = a[y].reshape(-1)
-        prev = a[y - 1].reshape(-1) if y else np.zeros(w * c, dtype=np.int32)
-        left = np.concatenate([np.zeros(c, dtype=np.int32), row[:-c]])
-        ul = np.concatenate([np.zeros(c, dtype=np.int32), prev[:-c]])
-        if f == 0:
-            out = row
-        elif f == 1:
-            out = row - left
-        elif f == 2:
-            out = row - prev
-        elif f == 3:
-            out = row - ((left + prev) >> 1)
-        else:
-            p = left + prev - ul
-            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - ul)
-            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul))
-            out = row - pred
-        raw.append(f)
-        raw += bytes((out % 256).astype(np.uint8))
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2 if c == 3 else 6, 0, 0, 0)
-    return sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-
-
-def test_png_codec_all_filters_and_color_types():
-    """decode_png reconstructs every scanline filter (None/Sub/Up/
-    Average/Paeth) exactly, handles RGBA (white-composite), and the
-    encode→decode roundtrip is lossless; hostile bytes return None."""
-    import numpy as np
-
-    from logrange_spark.ops import png
-
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 256, size=(11, 7, 3), dtype=np.uint8)
-    for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        dec = png.decode_png(_png_with_filters(arr, filters))
-        assert dec is not None and (dec == arr).all(), f"filters {filters}"
-
-    # lossless roundtrip through our own encoder
-    dec = png.decode_png(png.encode_png(arr))
-    assert dec is not None and (dec == arr).all()
-
-    # RGBA composites over white: alpha 0 → 255, alpha 255 → own value
-    rgba = np.zeros((2, 2, 4), dtype=np.uint8)
-    rgba[..., :3] = 10
-    rgba[0, :, 3] = 255
-    rgba[1, :, 3] = 0
-    dec = png.decode_png(_png_with_filters(rgba, [0]))
-    assert (dec[0] == 10).all() and (dec[1] == 255).all()
-
-    # totality (a truncation that only drops the trailing IEND CRC still
-    # decodes — tolerant-decoder behavior; cutting into IDAT must not)
-    enc = png.encode_png(arr)
-    for junk in (None, b"", b"\x89PNG", bytes(80), enc[:20],
-                 enc[: len(enc) // 2], bytes(reversed(enc))):
-        assert png.decode_png(junk) is None
-    for cut in range(0, len(enc), 11):
-        png.decode_png(enc[:cut])  # must not raise
-
-
-def test_png_deflate_bomb_rejected():
-    """A PNG declaring tiny dimensions but carrying a huge deflate stream
-    must be rejected without inflating past the declared raster size
-    (driver ADVICE r7: zlib.decompress had no output cap). Absurd
-    declared dimensions (> 1 GiB raster) are rejected before inflate."""
-    import struct
-    import tracemalloc
-    import zlib
-
-    from logrange_spark.ops import png
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    # declares 2x2 RGB (need = 2*(6+1)=14 bytes) but IDAT inflates to 64 MiB
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    bomb = sig + chunk(b"IHDR", ihdr) + chunk(
-        b"IDAT", zlib.compress(bytes(64 * 1024 * 1024), 9)
-    ) + chunk(b"IEND", b"")
-    tracemalloc.start()
-    assert png.decode_png(bomb) is None
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    assert peak < 8 * 1024 * 1024, peak  # never materialized the 64 MiB
-
-    # declared-dimension ceiling: 1 GiB+ raster rejected outright
-    huge = struct.pack(">IIBBBBB", 1 << 15, 1 << 15, 8, 2, 0, 0, 0)
-    big = sig + chunk(b"IHDR", huge) + chunk(
-        b"IDAT", zlib.compress(b"\x00" * 100)
-    ) + chunk(b"IEND", b"")
-    assert png.decode_png(big) is None
-
-    # a correct stream that merely has TRAILING garbage output is overlong
-    raw = b"\x00" * 14  # 2 rows of (filter byte + 6 RGB bytes)
-    over = sig + chunk(b"IHDR", ihdr) + chunk(
-        b"IDAT", zlib.compress(raw + b"X")
-    ) + chunk(b"IEND", b"")
-    assert png.decode_png(over) is None
-
-
-def test_png_resize_real_codec_matches_bmp_reference(spark):
-    """Same-pixels PNG and BMP through the Spark resize operator agree
-    EXACTLY — PNG is lossless, so unlike JPEG there is no tolerance."""
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-    from logrange_spark.ops import png
-
-    rng = np.random.default_rng(31)
-    arr = rng.integers(0, 256, size=(10, 14, 3), dtype=np.uint8)
-    rows = [(1, mm.encode_bmp24(arr[..., ::-1])), (2, png.encode_png(arr))]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in mm.resize(media, 7, 5, real_codec=True).collect()}
-    ref = mm.decode_bmp24(bytes(out[1]["payload"]))[..., ::-1]
-    got = png.decode_png(bytes(out[2]["payload"]))
-    assert got is not None and (got == ref).all()
-
-
 def test_near_duplicate_drops_equals_pair_based_dropset(spark):
     """The O(n)-output drop set must equal the pair-materializing path's
     id_b set exactly — including duplicate clusters and chained
@@ -1436,140 +913,6 @@ def test_near_duplicate_drops_equals_pair_based_dropset(spark):
         finally:
             dd.SKEW_CAP = old
         assert direct == via_pairs
-
-
-def test_pixel_features_real_decode_all_formats(spark):
-    """pixel_features computes features from REAL decoded pixels for
-    BMP, PNG and baseline JPEG — numpy-verified on a known image; a
-    non-decodable payload comes back decode_ok=False."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg, png
-    from logrange_spark.ops import multimodal as mm
-
-    rng = np.random.default_rng(13)
-    arr = rng.integers(0, 256, size=(9, 12, 3), dtype=np.uint8)
-    rows = [
-        (1, mm.encode_bmp24(arr[..., ::-1])),
-        (2, png.encode_png(arr)),
-        (3, bytes(jpeg.encode_jpeg(arr, quant=1))),
-        (4, b"not an image"),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in mm.pixel_features(media).collect()}
-
-    f = arr.astype(np.float64)
-    luma = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-    want = [f[..., 0].mean(), f[..., 1].mean(), f[..., 2].mean(),
-            luma.std(), luma.mean(), np.abs(np.diff(luma, axis=1)).mean(),
-            12 / 9, np.log2(9 * 12)]
-    # BMP and PNG are lossless → exact (to float32 storage); JPEG within
-    # its quant=1 rounding
-    for mid, tol in ((1, 1e-4), (2, 1e-4), (3, 1.5)):
-        assert out[mid]["decode_ok"], mid
-        got = out[mid]["feature"]
-        assert len(got) == mm.FEATURE_DIM
-        assert all(abs(g - w) <= tol for g, w in zip(got, want)), (mid, got, want)
-    assert not out[4]["decode_ok"] and out[4]["feature"] is None
-
-
-def _wav_pcm16(samples, rate=8000, channels=1):
-    import struct
-
-    import numpy as np
-
-    x = (np.clip(samples, -1, 1) * 32767).astype(np.int16)
-    if channels > 1:
-        x = np.repeat(x[:, None], channels, axis=1)
-    data = x.tobytes()
-    block = channels * 2
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block, block, 16)
-    body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def test_audio_features_real_pcm_decode(spark):
-    """audio_features computes rms/zcr/dominant-frequency from REAL
-    decoded PCM: a 440 Hz sine must report ~440 Hz dominant frequency
-    and the analytic rms; stereo mixes down; junk is decode_ok=False."""
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-
-    rate, dur = 8000, 1.0
-    t = np.arange(int(rate * dur)) / rate
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    rows = [
-        (1, _wav_pcm16(sine, rate)),
-        (2, _wav_pcm16(sine, rate, channels=2)),
-        (3, b"RIFF junk not a wav"),
-        (4, b"\x00" * 64),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in mm.audio_features(media).collect()}
-
-    for mid in (1, 2):
-        assert out[mid]["decode_ok"], mid
-        f = out[mid]["feature"]
-        rms, zcr, dom, centroid, peak, dur_s, srate, _ = f
-        assert abs(rms - 0.5 / np.sqrt(2)) < 0.01      # sine rms = A/√2
-        assert abs(dom - 440.0) < 2.0                  # dominant bin
-        assert abs(zcr - 2 * 440 / rate) < 0.01        # 2 crossings/cycle
-        assert abs(dur_s - 1.0) < 1e-6 and srate == rate
-        assert abs(peak - 0.5) < 0.01
-    assert not out[3]["decode_ok"] and not out[4]["decode_ok"]
-
-    # direct numpy check of the mono mixdown path
-    x, r = mm.decode_wav_pcm(_wav_pcm16(sine, rate, channels=2))
-    assert r == rate and abs(float(np.abs(x - sine[: len(x)]).max())) < 1e-3
-
-
-def test_gif_codec_and_real_frame_sample(spark):
-    """The GIF codec is REAL (LZW + compositing): encode→decode is exact
-    for paletted frames, interlace/transparency paths hold, and
-    frame_sample(real_codec=True) emits each animated-GIF frame as a
-    lossless PNG row while non-GIF payloads keep the stub fan-out."""
-    import numpy as np
-
-    from logrange_spark.ops import gif, png
-    from logrange_spark.ops import multimodal as mm
-
-    rng = np.random.default_rng(9)
-    f1 = (rng.integers(0, 4, size=(11, 14, 3)) * 85).astype(np.uint8)
-    f2 = (rng.integers(0, 4, size=(11, 14, 3)) * 85).astype(np.uint8)
-    f3 = (rng.integers(0, 4, size=(11, 14, 3)) * 85).astype(np.uint8)
-    anim = gif.encode_gif([f1, f2, f3])
-
-    # exact multi-frame roundtrip
-    frames = gif.decode_gif_frames(anim)
-    assert len(frames) == 3
-    assert all((g == w).all() for g, w in zip(frames, (f1, f2, f3)))
-
-    # totality
-    for junk in (None, b"", b"GIF89a", bytes(50), anim[:25], bytes(reversed(anim))):
-        assert gif.decode_gif(junk) is None
-    for cut in range(0, len(anim), 17):
-        gif.decode_gif(anim[:cut])  # never raises
-
-    # Spark frame_sample: real frames for the GIF, stub for junk
-    media = spark.createDataFrame(
-        [(1, bytes(anim)), (2, b"x" * 48)], "media_id long, payload binary"
-    )
-    out = mm.frame_sample(media, every_n_bytes=16, max_frames=2, real_codec=True).collect()
-    got = {(r["media_id"], r["frame_idx"]): bytes(r["frame"]) for r in out}
-    assert set(got) == {(1, 0), (1, 1), (2, 0), (2, 1)}  # max_frames caps the GIF
-    dec0 = png.decode_png(got[(1, 0)])
-    dec1 = png.decode_png(got[(1, 1)])
-    assert (dec0 == f1).all() and (dec1 == f2).all()
-    assert len(got[(2, 0)]) == 16  # stub slice
-
-    # resize + pixel dispatch cover GIF too
-    rz = gif.decode_gif(gif.resize_nearest_gif(bytes(anim), 7, 5))
-    yi = (np.arange(5) * 11 // 5).clip(0, 10)
-    xi = (np.arange(7) * 14 // 7).clip(0, 13)
-    assert (rz == f1[yi][:, xi]).all()
-    assert (mm.decode_pixels(bytes(anim)) == f1).all()
 
 
 def test_embedding_near_duplicates_duplicate_vector_cluster(spark, monkeypatch):
@@ -2162,79 +1505,7 @@ def test_tfidf_keywords_matches_reference(spark):
         text.tfidf_keywords(df, m=0)
 
 
-# ------------------------------------------------- perceptual image hashing
-def _grad_bmp(w, h, reverse=False, bump=None):
-    """Smooth horizontal gradient BMP; optional brightness bump square."""
-    import numpy as np
-
-    from logrange_spark.ops.multimodal import encode_bmp24
-
-    x = np.linspace(30, 220, w, dtype=np.float64)
-    arr = np.repeat(x[None, :], h, axis=0)
-    if reverse:
-        arr = arr[:, ::-1]
-    img = np.stack([arr, arr, arr], axis=-1).astype(np.uint8)
-    if bump:
-        r, c, s = bump
-        img[r : r + s, c : c + s] = np.minimum(
-            img[r : r + s, c : c + s].astype(int) + 90, 255
-        ).astype(np.uint8)
-    return encode_bmp24(img)
-
-
-def test_dhash64_reference_8x9(spark):
-    """On an exactly 8x9 image the box-average grid IS the luma plane, so
-    the expected hash is computable by an independent path."""
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(8, 9, 3), dtype=np.uint8)
-    payload = mm.encode_bmp24(img)
-    got = mm.dhash64(payload)
-    # independent expectation: BMP stores BGR, decode_pixels flips to RGB
-    f = img[..., ::-1].astype(np.float64)
-    luma = 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-    want = 0
-    i = 0
-    for r in range(8):
-        for c in range(8):
-            if luma[r, c] > luma[r, c + 1]:
-                want |= 1 << i
-            i += 1
-    want = want - (1 << 64) if want >= (1 << 63) else want
-    assert got == want
-    assert mm.dhash64(payload) == got  # deterministic
-    assert mm.dhash64(b"not an image") is None
-
-
-def test_image_near_duplicates(spark):
-    from logrange_spark.ops import multimodal as mm
-
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    base = _grad_bmp(60, 40)
-    near = _grad_bmp(60, 40, bump=(4, 10, 6))   # small local edit
-    far = _grad_bmp(60, 40, reverse=True)       # reversed gradient
-    h_base, h_near, h_far = (mm.dhash64(p) for p in (base, near, far))
-    assert 0 < ham(h_base, h_near) <= 6
-    assert ham(h_base, h_far) > 40
-    rows = [
-        (1, bytearray(base)),
-        (2, bytearray(near)),
-        (3, bytearray(far)),
-        (4, bytearray(b"junk payload")),        # undecodable → excluded
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in mm.image_near_duplicates(df, max_hamming=6).collect()
-    }
-    assert pairs == {(1, 2): ham(h_base, h_near)}
-
-
+# ------------------------------------------------- banded Hamming pairs
 def test_hamming_near_pairs_brute_force(spark):
     import itertools
     import random
@@ -2291,50 +1562,6 @@ def test_hamming_near_pairs_low_bits_ignores_high(spark):
         if d <= 3:
             want[(i, j)] = d
     assert got == want
-
-
-def test_audio_near_duplicates(spark):
-    import struct
-
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-
-    def wav(samples):
-        data = (np.clip(samples, -1, 1) * 32767).astype("<i2").tobytes()
-        fmt = struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, 1, 8000, 16000, 2, 16)
-        body = b"WAVE" + fmt + b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE"[:0] + body
-
-    rng = np.random.default_rng(9)
-    t = np.arange(8000) / 8000.0
-    envelope = 0.2 + 0.8 * np.abs(np.sin(2 * np.pi * 3 * t))  # energy shape
-    base = envelope * np.sin(2 * np.pi * 440 * t)
-    quiet = 0.4 * base                       # volume-scaled → same shape
-    noisy = base + rng.normal(0, 0.01, base.shape)  # tiny noise
-    other = (0.2 + 0.8 * np.abs(np.cos(2 * np.pi * 7 * t))) * np.sin(
-        2 * np.pi * 440 * t
-    )
-    h = {k: mm.audio_fingerprint64(wav(v)) for k, v in
-         [("base", base), ("quiet", quiet), ("noisy", noisy), ("other", other)]}
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    assert h["base"] == h["quiet"]           # volume invariance: exact
-    assert ham(h["base"], h["noisy"]) <= 6
-    assert ham(h["base"], h["other"]) > 12
-    assert mm.audio_fingerprint64(b"not audio") is None
-    df = spark.createDataFrame(
-        [(1, bytearray(wav(base))), (2, bytearray(wav(quiet))),
-         (3, bytearray(wav(noisy))), (4, bytearray(wav(other))),
-         (5, bytearray(b"junk"))],
-        "media_id long, payload binary",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in mm.audio_near_duplicates(df, max_hamming=6).collect()
-    }
-    assert {(1, 2), (1, 3), (2, 3)} <= pairs and not any(4 in p or 5 in p for p in pairs)
 
 
 # ------------------------------------------------- substring-level dedup
@@ -2489,96 +1716,7 @@ def test_repeated_spans_never_broadcasts(spark):
         assert "BroadcastHashJoin" not in plan, op.__name__
 
 
-# ----------------------------------------------------- MJPEG-in-MP4 frames
-def _mp4_mjpeg(frames_jpeg, two_chunks=False):
-    """Minimal ISO-BMFF container holding JPEG samples in an mdat, with
-    real stsd('jpeg')/stsz/stsc/stco sample tables — the structure any
-    demuxer reads. two_chunks=True splits samples across two chunks to
-    exercise the stsc run expansion."""
-    import struct
-
-    def box(typ, payload):
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommp41")
-    mdat_payload = b"".join(frames_jpeg)
-    # mdat starts right after ftyp; samples at known offsets inside it
-    mdat_off = len(ftyp) + 8
-    offs, cur = [], mdat_off
-    for f in frames_jpeg:
-        offs.append(cur)
-        cur += len(f)
-    mdat = box(b"mdat", mdat_payload)
-
-    n = len(frames_jpeg)
-    stsd = box(
-        b"stsd",
-        struct.pack(">II", 0, 1)
-        + box(b"jpeg", b"\0" * 6 + struct.pack(">H", 1) + b"\0" * 70),
-    )
-    stsz = box(b"stsz", struct.pack(">III", 0, 0, n)
-               + b"".join(struct.pack(">I", len(f)) for f in frames_jpeg))
-    if two_chunks and n >= 3:
-        # chunk 1: first 2 samples; chunk 2: the rest
-        stco = box(b"stco", struct.pack(">II", 0, 2)
-                   + struct.pack(">II", offs[0], offs[2]))
-        stsc = box(b"stsc", struct.pack(">I", 0) + struct.pack(">I", 2)
-                   + struct.pack(">III", 1, 2, 1)
-                   + struct.pack(">III", 2, n - 2, 1))
-    else:
-        stco = box(b"stco", struct.pack(">II", 0, 1) + struct.pack(">I", offs[0]))
-        stsc = box(b"stsc", struct.pack(">I", 0) + struct.pack(">I", 1)
-                   + struct.pack(">III", 1, n, 1))
-    stbl = box(b"stbl", stsd + stsz + stsc + stco)
-    minf = box(b"minf", stbl)
-    mdia = box(b"mdia", minf)
-    trak = box(b"trak", mdia)
-    mvhd = box(b"mvhd", b"\0" * 12 + struct.pack(">II", 1000, n * 40) + b"\0" * 80)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-def test_mjpeg_mp4_frame_decode(spark):
-    """frame_sample(real_codec=True) routes MJPEG-in-MP4 through the real
-    JPEG decoder: synthesized container → numpy-verified frames (lossless
-    at quant=1 on smooth data), multi-chunk sample tables handled, AVC-
-    less containers fall back to the stub without raising."""
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-    from logrange_spark.ops import multimodal as mm
-    from logrange_spark.ops import png
-
-    rng = np.random.default_rng(2)
-    # smooth gradient frames (DCT-exact at quant=1 after level shift)
-    frames = []
-    for k in range(4):
-        y, x = np.mgrid[0:16, 0:16]
-        arr = np.stack([(x * 8 + k * 3) % 256, (y * 8) % 256,
-                        ((x + y) * 4) % 256], axis=-1).astype(np.uint8)
-        frames.append(arr)
-    payload = _mp4_mjpeg([jpeg.encode_jpeg(f, quant=1) for f in frames],
-                         two_chunks=True)
-    # direct decode: every frame recovered exactly
-    got = mm.decode_mjpeg_frames(payload, max_frames=8)
-    assert got is not None and len(got) == 4
-    for a, b in zip(got, frames):
-        assert a.shape == b.shape and np.abs(a.astype(int) - b.astype(int)).max() <= 1
-    # max_frames cap respected
-    assert len(mm.decode_mjpeg_frames(payload, max_frames=2)) == 2
-    # through the Spark operator: 1 row → 4 PNG frame rows
-    df = spark.createDataFrame([(1, bytearray(payload))],
-                               "media_id long, payload binary")
-    rows = mm.frame_sample(df, real_codec=True).collect()
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2, 3]
-    dec0 = png.decode_png(bytes(rows[0]["frame"]))
-    assert dec0 is not None and np.abs(dec0.astype(int) - frames[0].astype(int)).max() <= 1
-    # non-MJPEG mp4 (header-only synth from parse tests) falls back to stub
-    assert mm.decode_mjpeg_frames(b"\x00" * 40) is None
-    for cut in range(0, len(payload), 97):
-        mm.decode_mjpeg_frames(payload[:cut])  # total on truncation
-
-
+# ------------------------------------------------- embedding drop set
 def test_embedding_near_duplicate_drops_equals_pair_path(spark):
     """O(n)-output embedding drop set == pairs→drop-id_b→distinct, on a
     corpus with a planted identical-vector cluster, jittered near-dups,
@@ -2692,83 +1830,6 @@ def test_canonical_url_matches_reference(spark):
     assert dups["http://example.com/a/b"] == (1, 5)
     assert dups["http://example.com/a/b?a=2&z=1"] == (5, 2)
     assert dups["https://example.com/"] == (9, 2)
-
-
-def _png_custom(arr16_or_8, ctype, depth, interlace):
-    """Reference PNG encoder for the decoder's long-tail paths: any
-    depth 8/16, optional Adam7 (filter 0 scanlines, spec pass order)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    a = arr16_or_8
-    h, w, c = a.shape
-    sbytes = depth // 8
-    passes = (
-        [(0, 0, 1, 1)]
-        if interlace == 0
-        else [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-    )
-    raw = bytearray()
-    dt = ">u2" if depth == 16 else "u1"
-    for x0, y0, dx, dy in passes:
-        sub = a[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        for y in range(sub.shape[0]):
-            raw.append(0)
-            raw += sub[y].astype(dt).tobytes()
-
-    def chunk(typ, data):
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace)
-    return sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-
-
-def test_png_adam7_and_16bit(spark):
-    """The former long-tail stubs now decode: Adam7-interlaced 8-bit RGB
-    reconstructs pixel-exactly (odd dims exercise empty/partial passes),
-    16-bit RGB scales via the high byte, and 16-bit Adam7 grayscale
-    composes both paths."""
-    import numpy as np
-
-    from logrange_spark.ops import png
-
-    rng = np.random.default_rng(8)
-    # odd dimensions: several Adam7 passes are partial, one can be empty
-    arr = rng.integers(0, 256, size=(11, 7, 3), dtype=np.uint8)
-    dec = png.decode_png(_png_custom(arr, 2, 8, 1))
-    assert dec is not None and (dec == arr).all()
-
-    # tiny image where late passes dominate
-    arr2 = rng.integers(0, 256, size=(2, 3, 3), dtype=np.uint8)
-    dec2 = png.decode_png(_png_custom(arr2, 2, 8, 1))
-    assert dec2 is not None and (dec2 == arr2).all()
-
-    # 16-bit RGB: low bytes are junk, high bytes must survive
-    hi = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint16)
-    a16 = (hi << 8) | rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint16)
-    dec16 = png.decode_png(_png_custom(a16, 2, 16, 0))
-    assert dec16 is not None and (dec16 == hi.astype(np.uint8)).all()
-
-    # 16-bit + Adam7 grayscale → replicated to RGB
-    g = rng.integers(0, 256, size=(9, 4, 1), dtype=np.uint16)
-    g16 = (g << 8) | 0x7F
-    decg = png.decode_png(_png_custom(g16, 0, 16, 1))
-    assert decg is not None and (decg == np.repeat(g.astype(np.uint8), 3, axis=2)).all()
-
-    # totality on truncation of an interlaced stream
-    enc = _png_custom(arr, 2, 8, 1)
-    for cut in range(0, len(enc), 13):
-        png.decode_png(enc[:cut])  # must not raise
-    # 16-bit palette stays rejected (spec: palette indices are 8-bit)
-    bad = bytearray(_png_custom(arr, 2, 8, 0))
-    assert png.decode_png(bytes(bad)) is not None
 
 
 # -------------------------------------------------------- boilerplate lines

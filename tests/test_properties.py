@@ -198,156 +198,6 @@ def test_select_roundtrip_through_parser(tags, offset, limit):
     assert stmt.offset == offset and stmt.limit == limit
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.binary(max_size=96))
-def test_parse_image_header_total_on_arbitrary_bytes(payload):
-    """The header codec consumes untrusted bytes: for ANY input it must
-    terminate and either return (fmt, w>=0, h>=0) or None — no exceptions,
-    no hangs on malformed segment lists."""
-    from logrange_spark.ops.multimodal import parse_image_header
-
-    out = parse_image_header(payload)
-    if out is not None:
-        fmt, w, h = out
-        assert fmt in ("png", "gif", "jpeg", "bmp")
-        assert w >= 0 and h >= 0
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(min_size=2, max_size=96))
-def test_parse_image_header_jpeg_prefix_total(tail):
-    """Force the JPEG segment walker specifically (the only looping path)."""
-    from logrange_spark.ops.multimodal import parse_image_header
-
-    parse_image_header(b"\xff\xd8" + tail)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.binary(max_size=128))
-def test_parse_audio_header_total_on_arbitrary_bytes(payload):
-    """WAV chunk walker: any bytes → result or None, never an exception
-    or a hang (chunk sizes come from the untrusted input)."""
-    from logrange_spark.ops.multimodal import parse_audio_header
-
-    out = parse_audio_header(payload)
-    if out is not None:
-        fmt, rate, channels, bits, dur = out
-        assert fmt == "wav" and dur >= 0
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(max_size=128))
-def test_parse_audio_header_riff_prefix_total(tail):
-    """Force the RIFF chunk walker with a valid signature prefix."""
-    from logrange_spark.ops.multimodal import parse_audio_header
-
-    parse_audio_header(b"RIFF\x10\x00\x00\x00WAVE" + tail)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.binary(max_size=160))
-def test_parse_video_header_total_on_arbitrary_bytes(payload):
-    """MP4 box walker: any bytes → result or None, never an exception or
-    a hang (box sizes, including 64-bit largesize and size=0 run-to-end,
-    come from the untrusted input)."""
-    from logrange_spark.ops.multimodal import parse_video_header
-
-    out = parse_video_header(payload)
-    if out is not None:
-        fmt, w, h, dur = out
-        assert fmt == "mp4" and w >= 0 and h >= 0 and dur >= 0
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(max_size=160))
-def test_parse_video_header_ftyp_prefix_total(tail):
-    """Force the nested moov/trak walkers with a valid ftyp prefix."""
-    from logrange_spark.ops.multimodal import parse_video_header
-
-    parse_video_header(b"\x00\x00\x00\x10ftypisom\x00\x00\x02\x00" + tail)
-
-
-# ---------------------------------------------------------------- codecs
-# Property tests for the pure-Python image codecs: roundtrip invariants
-# over arbitrary small images, and totality over arbitrary byte noise.
-# No Spark involved — these run at the numpy level.
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_png_bmp_roundtrip_lossless_property(w, h, seed):
-    import numpy as np
-
-    from logrange_spark.ops import multimodal as mm
-    from logrange_spark.ops import png
-
-    arr = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    assert (png.decode_png(png.encode_png(arr)) == arr).all()
-    assert (mm.decode_bmp24(mm.encode_bmp24(arr)) == arr).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=20),
-    st.integers(min_value=1, max_value=20),
-    st.integers(min_value=0, max_value=2**32 - 1),
-    st.booleans(),
-)
-def test_jpeg_roundtrip_bounded_property(w, h, seed, subsample):
-    import numpy as np
-
-    from logrange_spark.ops import jpeg
-
-    arr = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
-    dec = jpeg.decode_jpeg(jpeg.encode_jpeg(arr, quant=1, subsample=subsample))
-    assert dec is not None and dec.shape == arr.shape
-    if not subsample:
-        # 4:4:4 at quant=1: RGB→YCbCr and YCbCr→RGB each round (±1) and
-        # the quantized DCT round-trip rounds once more (±1) — worst
-        # case 3, and hypothesis does find a 3 on dense random noise
-        # (seed 1832098013 at 20×20); a ≤2 bound was wrong, not the codec
-        assert np.abs(dec.astype(int) - arr.astype(int)).max() <= 3
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=16),
-    st.integers(min_value=1, max_value=16),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_gif_roundtrip_exact_property(w, h, seed):
-    import numpy as np
-
-    from logrange_spark.ops import gif
-
-    # <= 256 distinct colors by construction (4 levels per channel)
-    arr = (np.random.default_rng(seed).integers(0, 4, (h, w, 3)) * 85).astype(
-        np.uint8
-    )
-    dec = gif.decode_gif(gif.encode_gif(arr))
-    assert dec is not None and (dec == arr).all()
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.binary(min_size=0, max_size=300))
-def test_codecs_total_on_noise_property(blob):
-    from logrange_spark.ops import gif, jpeg, png
-    from logrange_spark.ops import multimodal as mm
-
-    # none of the decoders may raise on arbitrary bytes
-    png.decode_png(blob)
-    jpeg.decode_jpeg(blob)
-    gif.decode_gif(blob)
-    mm.decode_bmp24(blob)
-    mm.decode_wav_pcm(blob)
-    mm.pixel_feature_vec(blob)
-    mm.audio_feature_vec(blob)
-
-
 @settings(max_examples=200, deadline=None)
 @given(
     st.lists(

@@ -109,6 +109,34 @@ def test_bad_requests(served):
         c.query("SELEKT FROM")
 
 
+@pytest.mark.parametrize("events", [
+    ["12", "9x"],
+    [[BASE_TS, "ok"], 7],
+    [[BASE_TS]],
+    [[BASE_TS, "m", {}, "extra"]],
+])
+def test_malformed_events_rejected_and_nothing_written(served, events):
+    """An event must be a dict or a [ts, msg] / [ts, msg, fields] list.
+    Anything else is a 400, and no event of the batch is stored (a bare
+    string used to be split into characters: "12" → ts=1, msg="2")."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    engine, c = served
+    req = urllib.request.Request(
+        f"{c.base_url}/api/v1/write",
+        data=json.dumps({"tags": "name=bad", "events": events}).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(req, timeout=30)
+    assert ei.value.code == 400
+    assert "event" in json.loads(ei.value.read())["err"]
+    assert c.query("SELECT FROM {name=bad}", limit=10)["events"] == []
+
+
 def test_tail_query_with_wait_sees_new_data(served):
     """POSITION tail over the wire = start at end-of-stream; with
     waitTimeout the server must observe rows written after the tail was

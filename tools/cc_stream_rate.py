@@ -199,7 +199,8 @@ def run_concurrent(
     table to measure k concurrent streams at CommonCrawl-sized shards
     (the default sf0.1 table gives 1.25k-doc slices at k=4, two orders
     of magnitude under a real crawl shard). The block is keyed
-    concurrency_k{k}_x10-class so the small-shard datapoint stays."""
+    concurrency_k{k}_<absolute input path> so the small-shard datapoint
+    stays and two inputs in same-named directories never collide."""
     from pyspark.sql import functions as F
 
     spark = _session()
@@ -287,7 +288,7 @@ def run_concurrent(
     # keyed by stream count so multiple k-points coexist (a scaling
     # curve, not a single overwritten sample)
     key = f"concurrency_k{k}" if in_path is None else (
-        f"concurrency_k{k}_{os.path.basename(os.path.dirname(in_path))}"
+        f"concurrency_k{k}_{os.path.abspath(in_path)}"
     )
     _merge_out(key, block)
     spark.stop()

@@ -52,9 +52,13 @@ def main() -> int:
     sys.path.insert(0, ".")
     import __spark_entry__ as entry_mod
 
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    argv = sys.argv[1:]
+    if "--sf" in argv:  # the spaced form of the usage line
+        i = argv.index("--sf")
+        argv[i : i + 2] = [f"--sf={argv[i + 1]}"]
+    args = [a for a in argv if not a.startswith("--")]
     sf_dir = "/root/testdata/sf0.01"
-    for a in sys.argv[1:]:
+    for a in argv:
         if a.startswith("--sf="):
             sf_dir = a.split("=", 1)[1]
 

@@ -56,6 +56,11 @@ class CursorToken:
         src, seq = rest.rsplit(":", 1)
         return CursorToken(int(ts), src, int(seq))
 
+    @staticmethod
+    def of_row(row) -> "CursorToken":
+        """The cursor just past ``row`` (any mapping with ts/src/seq)."""
+        return CursorToken(row["ts"], row["src"], row["seq"])
+
 
 def after_cursor(tok: CursorToken) -> Column:
     """(ts, src, seq) > (tok.ts, tok.src, tok.seq) lexicographically."""

@@ -23,6 +23,8 @@ import json
 import os
 import shutil
 import threading
+import time
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +34,7 @@ from .lql import ast
 from .lql.parser import parse_lql
 from .model.schema import LOG_SCHEMA
 from .model.tags import parse_tags, tag_line
-from .compiler.select import compile_select
+from .compiler.select import CursorToken, compile_select
 from .compiler.tagexpr import compile_tags
 from .ingest.writer import SeqState, normalize_rows
 
@@ -856,8 +858,6 @@ class Engine:
         dependency. A chunk deleted between planning and execution
         (concurrent TRUNCATE/compact) is covered by ignoreMissingFiles,
         the same contract as the directory scan."""
-        from .compiler.select import CursorToken
-
         min_ns = sel.range.min_ns if sel.range is not None else None
         max_ns = sel.range.max_ns if sel.range is not None else None
         tail_k = None
@@ -1031,8 +1031,6 @@ class Engine:
         predates seq high-water stats (same posture as
         ``chunks_after_cursor``).
         """
-        from .compiler.select import CursorToken
-
         src_ids = self.resolve_sources(stmt.source)
         best = None
         with self._write_lock:
@@ -1054,73 +1052,12 @@ class Engine:
         probe = ast.Select(None, stmt.source, stmt.range, stmt.where,
                            ast.Position("tail"), -1, 1)
         rows = self.select(probe, None).collect()
-        if rows:
-            return CursorToken(rows[0]["ts"], rows[0]["src"], rows[0]["seq"])
-        return None
+        return CursorToken.of_row(rows[0]) if rows else None
 
-    def follow(self, lql: str, wait_timeout_s: float = 60.0, poll_s: float = 0.5):
-        """tail -f: generator yielding batches of new matching rows.
-
-        The WaitNewData analogue (reference: pkg/cursor/cursor.go:316-327,
-        capped at 60 s like pkg/backend/querier.go:42): after a scan comes
-        back empty the generator BLOCKS on the engine's write condition —
-        the pruned scan re-runs only when a write has actually landed, so
-        an idle follow costs zero driver jobs (round-4 finding: the old
-        0.5 s poll re-ran the full scan up to 120× per wait window).
-        Stops after ``wait_timeout_s`` with no new data. POSITION/OFFSET
-        in the statement apply to the first batch only. ``poll_s`` is kept
-        for API compatibility; the wait is event-driven now.
-        """
-        import time as _time
-
-        from .compiler.select import CursorToken
-
-        stmt = parse_lql(lql)
-        if not isinstance(stmt, ast.Select):
-            raise ValueError("follow() accepts SELECT statements only")
-        if stmt.format:
-            raise ValueError("follow() requires the default projection (no format)")
-        wait_timeout_s = min(wait_timeout_s, 60.0)
-        cursor: CursorToken | None = None
-
-        pos = stmt.position.pos_id.lower() if stmt.position else "head"
-        if pos == "tail":
-            # start at end-of-stream: seed the cursor with the last row
-            cursor = self.tail_cursor(stmt)
-            stmt = ast.Select(stmt.format, stmt.source, stmt.range, stmt.where,
-                              None, None, stmt.limit)
-
-        idle_since = _time.monotonic()
-        while True:
-            epoch = self.write_epoch()  # before the scan: no lost wakeup
-            if cursor is None:
-                batch = self.select(stmt, None).collect()
-            elif not self.chunks_after_cursor(
-                self.resolve_sources(stmt.source), cursor
-            ):
-                # the wakeup was for an unrelated partition (or the data
-                # is already consumed): the catalog proves no row can
-                # follow the cursor — skip the scan entirely (zero Spark
-                # jobs; this is what holds follow p99 at store scale)
-                batch = []
-            else:
-                nxt = ast.Select(
-                    stmt.format, stmt.source, stmt.range, stmt.where,
-                    ast.Position(cursor.encode()), None, stmt.limit,
-                )
-                batch = self.select(nxt, None).collect()
-            if batch:
-                last = batch[-1]
-                cursor = CursorToken(last["ts"], last["src"], last["seq"])
-                idle_since = _time.monotonic()
-                yield batch
-                continue
-            while True:
-                remaining = wait_timeout_s - (_time.monotonic() - idle_since)
-                if remaining <= 0:
-                    return
-                if self.wait_for_write(epoch, remaining) != epoch:
-                    break  # a write landed somewhere: re-run the scan
+    def follow(self, lql: str, wait_timeout_s: float = 60.0):
+        """tail -f: generator yielding batches of new matching rows
+        (``follow_rows`` over this store)."""
+        return follow_rows(self, lql, wait_timeout_s)
 
     # ------------------------------------------------------------- admin
     def show_partitions(self, stmt: ast.ShowPartitions) -> DataFrame:
@@ -1732,6 +1669,73 @@ class Engine:
         with open(tmp, "w") as f:
             json.dump(self._pipes, f)
         os.replace(tmp, self._pipes_path)
+
+
+def wait_rows(source, stmt: ast.Select, after: CursorToken | None,
+              timeout_s: float) -> list:
+    """The one WaitNewData loop (reference: pkg/cursor/cursor.go:316-327),
+    shared by ``follow_rows``, the server's ``waitTimeout`` read and the
+    cursor-pull workers. Returns the rows of ``stmt``, a positioned
+    SELECT over ``source`` (an Engine or a ShardReader); while there are
+    none it blocks on ``source.wait_for_write`` for up to ``timeout_s``
+    and looks again after every write, so an idle wait runs no scan.
+
+    ``after`` is the forward value cursor ``stmt`` reads past, or None.
+    With a cursor, each look first asks the chunk catalog: when no chunk
+    can hold a row past ``after`` (the data is consumed, or the write was
+    to an unrelated partition) the scan is skipped with zero Spark jobs —
+    what holds follow p99 at store scale. The write epoch is taken
+    before the first look, so a write landing during a look wakes the
+    next wait instead of being lost.
+    """
+    def look() -> list:
+        if after is not None and not source.chunks_after_cursor(
+            source.resolve_sources(stmt.source), after
+        ):
+            return []
+        return source.select(stmt).collect()
+
+    epoch = source.write_epoch()
+    rows = look()
+    deadline = time.monotonic() + timeout_s
+    while not rows:
+        remaining = deadline - time.monotonic()
+        if remaining <= 0:
+            break
+        new_epoch = source.wait_for_write(epoch, remaining)
+        if new_epoch != epoch:
+            epoch = new_epoch
+            rows = look()
+    return rows
+
+
+def follow_rows(source, lql: str, wait_timeout_s: float = 60.0):
+    """tail -f over ``source`` (an Engine or a ShardReader): generator
+    yielding batches of new matching rows, each read through
+    ``wait_rows`` from the value cursor after the previous batch. Stops
+    after ``wait_timeout_s`` (capped at 60 s like
+    pkg/backend/querier.go:42) without a new batch. POSITION/OFFSET in
+    the statement apply to the first batch only; POSITION tail starts at
+    end-of-stream.
+    """
+    stmt = parse_lql(lql)
+    if not isinstance(stmt, ast.Select):
+        raise ValueError("follow() accepts SELECT statements only")
+    if stmt.format:
+        raise ValueError("follow() requires the default projection (no format)")
+    wait_timeout_s = min(wait_timeout_s, 60.0)
+    cursor = None
+    if stmt.position and stmt.position.pos_id.lower() == "tail":
+        cursor = source.tail_cursor(stmt)
+        stmt = replace(stmt, position=None, offset=None)
+    while True:
+        if cursor is not None:
+            stmt = replace(stmt, position=ast.Position(cursor.encode()), offset=None)
+        batch = wait_rows(source, stmt, cursor, wait_timeout_s)
+        if not batch:
+            return
+        cursor = CursorToken.of_row(batch[-1])
+        yield batch
 
 
 def _source_to_str(source: ast.Source | None) -> str:

@@ -19,14 +19,15 @@ from __future__ import annotations
 import os
 import socket
 import ssl
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .compiler.formatter import compile_format
-from .compiler.select import compile_select
+from .compiler.select import CursorToken, compile_select
+from .engine import wait_rows
 from .lql import ast
 from .lql.parser import parse_lql
 
@@ -299,6 +300,8 @@ def start_forwarder(
 # wait_for_write / chunks_after_cursor / resolve_sources), so it runs
 # unchanged over the sharded read-only tier.
 
+PULL_WAIT_S = 1.0  # longest one pull blocks for new rows before the stop check
+
 
 class CursorHandle:
     """Handle for a cursor-pull worker thread."""
@@ -336,8 +339,6 @@ class CursorHandle:
 def _load_cursor(state_path: str):
     import json as _json
 
-    from .compiler.select import CursorToken
-
     try:
         with open(state_path) as f:
             tok = _json.load(f).get("cursor")
@@ -356,12 +357,13 @@ def _save_cursor(state_path: str, cursor) -> None:
 
 
 def _pull_loop(source, lql: str, state_path: str, deliver, handle: CursorHandle,
-               poll_s: float = 1.0, retry_s: float = 5.0,
-               max_retries: int | None = None) -> None:
-    """The worker loop: saved position → select → deliver → persist
-    position (at-least-once across worker crashes: the position advances
-    only AFTER a successful delivery; a crash in between re-delivers the
-    last batch — the reference worker's semantics, worker.go:48-104).
+               retry_s: float = 5.0, max_retries: int | None = None) -> None:
+    """The worker loop: saved position → ``engine.wait_rows`` (the one
+    WaitNewData loop, bounded by PULL_WAIT_S so a stop is seen) →
+    deliver → persist position (at-least-once across worker crashes:
+    the position advances only AFTER a successful delivery; a crash in
+    between re-delivers the last batch — the reference worker's
+    semantics, worker.go:48-104).
     Writer restarts on the store are invisible here: the query surface
     re-snapshots per call. Late records (ts below the cursor watermark)
     are outside the value-cursor contract, exactly as for follow().
@@ -387,8 +389,6 @@ def _pull_loop(source, lql: str, state_path: str, deliver, handle: CursorHandle,
     forensics). ``handle.error`` is
     otherwise reserved for non-retryable setup failures (bad LQL)
     raised before the loop starts."""
-    from .compiler.select import CursorToken
-
     stmt0 = parse_lql(lql)
     if not isinstance(stmt0, ast.Select):
         raise ValueError("cursor forwarder expects a SELECT query")
@@ -403,24 +403,13 @@ def _pull_loop(source, lql: str, state_path: str, deliver, handle: CursorHandle,
             cursor = CursorToken.decode(pos)
     while not handle._stop.is_set():
         try:
-            epoch = source.write_epoch()
-            if cursor is not None and not source.chunks_after_cursor(
-                source.resolve_sources(base.source), cursor
-            ):
-                batch = []  # catalog proves nothing follows the cursor
-            else:
-                q = base if cursor is None else ast.Select(
-                    None, base.source, base.range, base.where,
-                    ast.Position(cursor.encode()), None, base.limit,
-                )
-                batch = source.select(q, None).collect()
+            q = base if cursor is None else replace(
+                base, position=ast.Position(cursor.encode()))
+            batch = wait_rows(source, q, cursor, PULL_WAIT_S)
             if batch:
                 deliver(batch)
-                last = batch[-1]
-                cursor = CursorToken(last["ts"], last["src"], last["seq"])
+                cursor = CursorToken.of_row(batch[-1])
                 _save_cursor(state_path, cursor)
-            else:
-                source.wait_for_write(epoch, poll_s)
             # a FULL successful iteration (delivered, or verified-empty)
             # resets the consecutive counter: the prior failure was
             # transient. Reset sits after deliver/save so a permanently

@@ -81,8 +81,9 @@ def normalize_rows(
     reservation needs serialization; holding the lock across this loop
     serialized every concurrent writer's CPU work).
 
-    Accepts (ts_ns, msg), (ts_ns, msg, fields) or dict events; a
-    None/absent ts stamps ingest time. Field merge: write-level fields
+    Accepts (ts_ns, msg), (ts_ns, msg, fields) tuples or lists, or dict
+    events, and raises ValueError for any other event; a None/absent ts
+    stamps ingest time. Field merge: write-level fields
     WIN on key clash (record fields first, write fields overwrite —
     mirrors api/rpc/ingestor.go:159-230 first-match lookup)."""
     tmap = parse_tags(tags) if isinstance(tags, str) else {str(k): str(v) for k, v in tags.items()}
@@ -93,15 +94,20 @@ def normalize_rows(
     ts_l: list[int] = []
     msg_l: list[str] = []
     f_l: list[dict] = []
-    for ev in events:
+    for i, ev in enumerate(events):
         if isinstance(ev, dict):
             ts = ev.get("ts")
             msg = ev.get("msg", "")
             f = ev.get("fields")
-        else:
+        elif isinstance(ev, (tuple, list)) and len(ev) in (2, 3):
             ts = ev[0]
             msg = ev[1]
             f = ev[2] if len(ev) > 2 else None
+        else:
+            raise ValueError(
+                f"event {i}: expected a dict or a (ts, msg[, fields]) tuple "
+                f"or list, got {ev!r:.60}"
+            )
         fields = {str(k): str(v) for k, v in f.items()} if f else {}
         ts_l.append(time.time_ns() if ts is None else int(ts))
         msg_l.append(msg if type(msg) is str else str(msg))

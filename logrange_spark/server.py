@@ -36,12 +36,11 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 from dataclasses import replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .compiler.select import CursorToken
-from .engine import MAX_LIMIT
+from .engine import MAX_LIMIT, wait_rows
 from .lql import ast
 from .lql.parser import parse_lql
 
@@ -133,7 +132,7 @@ def query_once(engine, req: dict) -> dict:
         # batch-compiled 'tail going forward' is always empty; the cursor
         # semantics are 'start at end-of-stream, return what arrives
         # later'. Seed a value cursor from the current last row (like
-        # engine.follow) so the wait loop — and the returned pos — can
+        # engine.follow_rows) so the wait loop — and the returned pos — can
         # actually observe new data.
         ct = engine.tail_cursor(stmt)
         if ct is not None:
@@ -151,45 +150,17 @@ def query_once(engine, req: dict) -> dict:
             pos = CursorToken(0, "", 0).encode()
         stmt = replace(stmt, position=ast.Position(pos), offset=0)
 
-    def run():
-        return engine.select(stmt).collect()
-
-    epoch = engine.write_epoch()  # before the scan: no lost wakeup
-    rows = run()
-    if not rows and wait_timeout > 0:
-        # Event-driven wait: block on the engine's write condition instead
-        # of re-running the pruned scan every 0.5 s. A filter that matches
-        # nothing costs ONE scan per landed write (zero while idle) rather
-        # than 120 re-scans per 60 s wait window.
-        # forward value cursor: the chunk catalog can prove a wakeup
-        # irrelevant (write landed in an unrelated partition) without a
-        # scan — same fast path as engine.follow
-        wait_tok = None
-        if stmt.position and (stmt.offset or 0) >= 0:
-            try:
-                wait_tok = CursorToken.decode(stmt.position.pos_id)
-            except Exception:
-                wait_tok = None
-        deadline = time.monotonic() + wait_timeout
-        while not rows:
-            remaining = deadline - time.monotonic()
-            if remaining <= 0:
-                break
-            new_epoch = engine.wait_for_write(epoch, remaining)
-            if new_epoch == epoch:
-                continue  # timed out with no write: deadline check exits
-            epoch = new_epoch
-            if wait_tok is not None and not engine.chunks_after_cursor(
-                engine.resolve_sources(stmt.source), wait_tok
-            ):
-                continue
-            rows = run()
-
-    if rows:
-        last = rows[-1]
-        next_pos = CursorToken(last["ts"], last["src"], last["seq"]).encode()
-    else:
-        next_pos = pos  # nothing read: the cursor did not move
+    # a forward value cursor (the tail seed, a nextQueryRequest echo)
+    # lets the chunk catalog skip the scan when nothing can follow it
+    after = None
+    if stmt.position and (stmt.offset or 0) >= 0:
+        try:
+            after = CursorToken.decode(stmt.position.pos_id)
+        except ValueError:
+            pass  # head or another non-cursor position: always scan
+    rows = wait_rows(engine, stmt, after, wait_timeout)
+    # nothing read: the cursor did not move
+    next_pos = CursorToken.of_row(rows[-1]).encode() if rows else pos
 
     return {
         "events": [_event_of_row(r) for r in rows],
@@ -216,20 +187,13 @@ def write_batch(engine, req: dict) -> dict:
         from .model.tags import parse_tags
 
         fields = parse_tags(fields) if fields else None
-    events = []
-    for i, ev in enumerate(req.get("events") or []):
-        if isinstance(ev, dict):
-            events.append(
-                (ev.get("timestamp"), ev.get("message", ""), ev.get("fields") or {})
-            )
-        elif isinstance(ev, list) and len(ev) in (2, 3):
-            events.append(tuple(ev))
-        else:
-            raise ApiError(
-                400,
-                f"event {i}: expected an object or a [ts, msg] / "
-                f"[ts, msg, fields] list, got {type(ev).__name__}",
-            )
+    # api.LogEvent objects become (ts, msg, fields); anything else goes
+    # to engine.write as is, whose event-shape check answers 400
+    events = [
+        (ev.get("timestamp"), ev.get("message", ""), ev.get("fields") or {})
+        if isinstance(ev, dict) else ev
+        for ev in req.get("events") or []
+    ]
     try:
         res = engine.write(tags, events, fields=fields)
     except Exception as e:
@@ -303,6 +267,10 @@ class _Handler(BaseHTTPRequestHandler):
     # set by serve(): the engine this handler serves
     engine = None
     protocol_version = "HTTP/1.1"
+    # headers and body go out in two sends on a keep-alive socket: with
+    # Nagle on, the body waits for the client's delayed ACK (~40 ms on
+    # every small response)
+    disable_nagle_algorithm = True
 
     def log_message(self, *args):  # quiet
         pass

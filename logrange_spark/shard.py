@@ -438,6 +438,8 @@ class ShardReader:
         if not roots:
             raise FileNotFoundError(f"no shard-* stores under {root!r}")
         self._refresh_lock = threading.Lock()
+        # taken before the stores are read (see _refresh_locked)
+        self._fingerprint = self._state_fingerprint()
         self.engines = [Engine(spark, r, read_only=True) for r in roots]
         # engines replaced by refresh() are NOT closed inline: a query
         # planned against the previous snapshot may still be reading
@@ -447,7 +449,6 @@ class ShardReader:
         # (one engine per bookmark-invalidating refresh, which only
         # happens when a writer compacts its chunk log).
         self._retired: list["Engine"] = []
-        self._fingerprint = self._state_fingerprint()
 
     def refresh(self) -> None:
         """Bring every shard snapshot up to date at O(new state): each
@@ -463,6 +464,11 @@ class ShardReader:
     def _refresh_locked(self) -> None:
         from .engine import Engine
 
+        # the fingerprint is taken BEFORE the stores are read: a commit
+        # landing during the replay then still differs from it, so the
+        # next freshness check refreshes again (taken after, it would
+        # cover a commit the replay missed until the next write)
+        fp = self._state_fingerprint()
         # shard-SET change (growth, or an offline rebalance that added
         # stores): a snapshot built on the old root list would silently
         # miss every src that moved to a shard it never opened — the
@@ -501,7 +507,7 @@ class ShardReader:
                 self._retired.append(e)
                 fresh.append(Engine(self.spark, e.root, read_only=True))
         self.engines = fresh
-        self._fingerprint = self._state_fingerprint()
+        self._fingerprint = fp
 
     def _snapshot(self) -> list["Engine"]:
         """Freshness check + engine-list snapshot as ONE atomic step.
@@ -524,13 +530,12 @@ class ShardReader:
 
         # the root list is part of the state: a new shard-NNN store
         # must flip the fingerprint even before anything writes to it
-        fp = ";".join(
-            os.path.basename(r) for r in shard_roots(self.root)
-        ).encode() + b"|"
-        for e in self.engines:
+        roots = shard_roots(self.root)
+        fp = ";".join(os.path.basename(r) for r in roots).encode() + b"|"
+        for r in roots:
             for name in self._STATE_FILES:
                 try:
-                    st = os.stat(os.path.join(e.state_dir, name))
+                    st = os.stat(os.path.join(r, "state", name))
                     fp += b"%d:%d;" % (st.st_mtime_ns, st.st_size)
                 except OSError:
                     fp += b"-;"
@@ -542,12 +547,12 @@ class ShardReader:
         of the single store's always-current in-process catalog)."""
         self._snapshot()
 
-    # write_epoch / wait_for_write give the server's WaitNewData loop
-    # (and Engine.follow's event wait) a cross-PROCESS signal: there is
-    # no shared condition variable with the writer processes, so the
-    # wait is a state-file poll at ``poll_s`` — write→visible latency on
-    # the query tier floors at the poll interval (documented trade; the
-    # in-process engine's event-driven follow keeps its ~130 ms p50).
+    # write_epoch / wait_for_write give engine.wait_rows (the one
+    # WaitNewData loop) a cross-PROCESS signal: there is no shared
+    # condition variable with the writer processes, so the wait is a
+    # state-file poll at ``poll_s`` — write→visible latency on the query
+    # tier floors at the poll interval (documented trade; the in-process
+    # engine's event-driven follow keeps its ~130 ms p50).
     def write_epoch(self) -> int:
         return self._state_fingerprint()
 
@@ -729,16 +734,13 @@ class ShardReader:
         self.logs().createOrReplaceTempView("logs")
         return self.spark.sql(q)
 
-    def follow(self, lql: str, wait_timeout_s: float = 60.0,
-               poll_s: float = 0.5):
-        """tail -f across all shards: Engine.follow verbatim — it only
-        touches select / tail_cursor / write_epoch / wait_for_write /
-        chunks_after_cursor / resolve_sources, all of which this class
-        provides (the event wait becomes the cross-process state-file
-        poll, so write→visible latency floors at ``self.poll_s``)."""
-        from .engine import Engine
+    def follow(self, lql: str, wait_timeout_s: float = 60.0):
+        """tail -f across all shards: ``engine.follow_rows`` over this
+        reader (its wait is the cross-process state-file poll, so
+        write→visible latency floors at ``self.poll_s``)."""
+        from .engine import follow_rows
 
-        return Engine.follow(self, lql, wait_timeout_s, poll_s)
+        return follow_rows(self, lql, wait_timeout_s)
 
     def show_partitions(self, stmt) -> "DataFrame":
         """Merged SHOW PARTITIONS: per-shard metadata WITHOUT the

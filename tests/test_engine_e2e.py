@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from logrange_spark.compiler.select import CursorToken, compile_select
 from logrange_spark.lql import ast
 from logrange_spark.lql.parser import parse_lql
@@ -275,7 +277,7 @@ def test_follow_tail_sees_new_writes(engine):
 
     def consume():
         for batch in engine.follow(
-            "SELECT FROM {name=fol} WHERE msg PREFIX 'post'", wait_timeout_s=10, poll_s=0.2
+            "SELECT FROM {name=fol} WHERE msg PREFIX 'post'", wait_timeout_s=10
         ):
             got.extend(batch)
             if len(got) >= 4:
@@ -294,8 +296,59 @@ def test_follow_tail_sees_new_writes(engine):
 
 def test_follow_tail_skips_existing(engine):
     engine.write({"name": "fol2"}, [(BASE_TS + i * NS, f"old {i}", {}) for i in range(3)])
-    batches = list(engine.follow("SELECT FROM {name=fol2} POSITION tail", wait_timeout_s=1.5, poll_s=0.2))
+    batches = list(engine.follow("SELECT FROM {name=fol2} POSITION tail", wait_timeout_s=1.5))
     assert batches == []  # nothing new after end-of-stream → times out empty
+
+
+def test_wait_loop_is_the_only_write_wait():
+    """``engine.wait_rows`` is the one place that pairs the write epoch
+    and write wait with the chunk-catalog skip: every call to
+    ``write_epoch()`` / ``wait_for_write()`` in the library is inside
+    it, and ``chunks_after_cursor()`` is called only there and in
+    ShardReader's per-shard delegation."""
+    import ast as pyast
+    import pathlib
+
+    import logrange_spark
+
+    callers: dict[str, set] = {
+        "write_epoch": set(), "wait_for_write": set(), "chunks_after_cursor": set()
+    }
+
+    def visit(node, mod, scope):
+        for child in pyast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (pyast.FunctionDef, pyast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if (
+                isinstance(child, pyast.Call)
+                and isinstance(child.func, pyast.Attribute)
+                and child.func.attr in callers
+            ):
+                callers[child.func.attr].add(f"{mod}:{scope}")
+            visit(child, mod, inner)
+
+    pkg = pathlib.Path(logrange_spark.__file__).parent
+    for path in sorted(pkg.rglob("*.py")):
+        visit(pyast.parse(path.read_text()), path.relative_to(pkg).as_posix(), "")
+    assert callers == {
+        "write_epoch": {"engine.py:wait_rows"},
+        "wait_for_write": {"engine.py:wait_rows"},
+        "chunks_after_cursor": {
+            "engine.py:wait_rows.look",
+            "shard.py:ShardReader.chunks_after_cursor",
+        },
+    }
+
+
+@pytest.mark.parametrize("event", ["12", (1,), (1, "m", {}, "x"), 7])
+def test_write_rejects_malformed_event_in_process(engine, event):
+    """The event-shape check lives in normalize_rows, so an in-process
+    Engine.write refuses what the HTTP write refuses (a bare string used
+    to be split into ts="1", msg="2") and stores none of the batch."""
+    with pytest.raises(ValueError, match="event 1"):
+        engine.write({"name": "badshape"}, [(BASE_TS, "ok"), event])
+    assert engine.query("SELECT FROM {name=badshape}").collect() == []
 
 
 def test_show_partitions_zero_footer_reads(engine, monkeypatch):

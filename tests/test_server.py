@@ -137,26 +137,80 @@ def test_malformed_events_rejected_and_nothing_written(served, events):
     assert c.query("SELECT FROM {name=bad}", limit=10)["events"] == []
 
 
-def test_tail_query_with_wait_sees_new_data(served):
+def test_tail_query_with_wait_sees_new_data(served, monkeypatch):
     """POSITION tail over the wire = start at end-of-stream; with
     waitTimeout the server must observe rows written after the tail was
     taken (round-3 review fix: the tail is seeded into a value cursor
     rather than re-running the always-empty batch tail plan)."""
     engine, c = served
     c.write("name=tailsrv", [(BASE_TS, "existing", {})])
+    # the writer waits until the query blocks (the tail is taken by
+    # then), not a fixed delay that a cold first compile can outrun
+    waiting = threading.Event()
+    orig_wait = engine.wait_for_write
+
+    def wait_for_write(*a, **kw):
+        waiting.set()
+        return orig_wait(*a, **kw)
+
+    monkeypatch.setattr(engine, "wait_for_write", wait_for_write)
 
     def later():
-        time.sleep(1.5)
+        waiting.wait(60)
         engine.write({"name": "tailsrv"}, [(BASE_TS + NS, "new arrival", {})])
 
     t = threading.Thread(target=later)
     t.start()
     r = c.query("SELECT FROM {name=tailsrv} POSITION tail", limit=10, wait_timeout=20)
-    t.join()
+    t.join(timeout=60)
     assert [e["message"] for e in r["events"]] == ["new arrival"]
     # and the returned cursor continues from there
     r2 = c.query(r["nextQueryRequest"])
     assert r2["events"] == []
+
+
+def test_cursor_echo_at_end_of_stream_runs_no_scan(served, monkeypatch):
+    """A nextQueryRequest echo at end-of-stream is answered from the
+    chunk catalog alone: no row can follow the cursor, so no Spark scan
+    runs, even before any wait."""
+    engine, c = served
+    engine.write({"name": "drained"}, [(BASE_TS + i * NS, f"d{i}", {}) for i in range(3)])
+    r1 = c.query("SELECT FROM {name=drained}", limit=10)
+    assert len(r1["events"]) == 3
+    calls = {"n": 0}
+    orig = engine.select
+
+    def counting_select(*a, **kw):
+        calls["n"] += 1
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(engine, "select", counting_select)
+    r2 = c.query({**r1["nextQueryRequest"], "waitTimeout": 0})
+    assert r2["events"] == []
+    assert r2["nextQueryRequest"]["pos"] == r1["nextQueryRequest"]["pos"]
+    assert calls["n"] == 0
+
+
+def test_small_responses_have_no_transport_stall(served):
+    """Headers and body of a small response leave in two sends on a
+    keep-alive connection; with Nagle's algorithm on, the second waits
+    for the client's delayed ACK (~40 ms a response)."""
+    import http.client
+    import statistics
+
+    _, c = served
+    conn = http.client.HTTPConnection(c.base_url.split("//", 1)[1], timeout=30)
+    try:
+        times = []
+        for _ in range(10):
+            t0 = time.perf_counter()
+            conn.request("GET", "/api/v1/ping")
+            resp = conn.getresponse()
+            assert resp.status == 200 and resp.read()
+            times.append(time.perf_counter() - t0)
+    finally:
+        conn.close()
+    assert statistics.median(times) < 0.020
 
 
 def test_tail_query_on_empty_stream(served):

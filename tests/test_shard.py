@@ -573,6 +573,72 @@ def _wait_for(cond, timeout=30.0, step=0.2):
     return cond()
 
 
+def test_shard_reader_follow_tail_sees_writer_writes(spark, twin_stores):
+    """ShardReader.follow runs the store's follow loop over the reader:
+    POSITION tail skips what exists and yields a row that a shard's
+    writer engine commits while the follower waits."""
+    import threading
+
+    sroot, engines, _ = twin_stores
+    router = sh.ShardRouter(engines)
+    router.write({"name": "shfol"}, [(BASE, "old", {})])
+    reader = sh.ShardReader(spark, sroot, poll_s=0.1)
+    waiting = threading.Event()
+    orig_wait = reader.wait_for_write
+
+    def wait_for_write(*a, **kw):
+        waiting.set()
+        return orig_wait(*a, **kw)
+
+    reader.wait_for_write = wait_for_write
+    got = []
+
+    def consume():
+        for batch in reader.follow("SELECT FROM {name=shfol} POSITION tail",
+                                   wait_timeout_s=30):
+            got.extend(r["msg"] for r in batch)
+            return
+
+    t = threading.Thread(target=consume)
+    t.start()
+    assert waiting.wait(60)
+    router.write({"name": "shfol"}, [(BASE + NS, "new", {})])
+    t.join(timeout=60)
+    assert not t.is_alive()
+    assert got == ["new"]
+
+
+def test_shard_reader_sees_a_commit_that_lands_during_its_refresh(
+    spark, twin_stores, monkeypatch
+):
+    """A writer commit landing after a refresh replayed the shard stores
+    but before it recorded the state fingerprint must not be hidden: the
+    next query refreshes again and sees the row (the fingerprint used to
+    be taken after the replay, so the reader stayed stale until the next
+    write — a cursor forwarder over the reader then never delivered it)."""
+    sroot, engines, _ = twin_stores
+    router = sh.ShardRouter(engines)
+    reader = sh.ShardReader(spark, sroot)
+    orig = Engine.refresh_read_only
+    calls = []
+
+    def refresh_then_commit(self):
+        ok = orig(self)
+        calls.append(self.root)
+        if len(calls) == len(reader.engines):  # every store replayed
+            router.write({"name": "midrefresh"}, [(BASE, "landed mid-refresh", {})])
+        return ok
+
+    monkeypatch.setattr(Engine, "refresh_read_only", refresh_then_commit)
+    router.write({"name": "trigger"}, [(BASE, "t", {})])
+    assert len(reader.query("SELECT FROM {name=trigger}").collect()) == 1
+    assert len(calls) == len(reader.engines)
+    monkeypatch.setattr(Engine, "refresh_read_only", orig)
+    rows = reader.query("SELECT FROM {name=midrefresh}").collect()
+    assert [r["msg"] for r in rows] == ["landed mid-refresh"]
+    reader.close()
+
+
 def test_cursor_forwarder_drains_sharded_root(spark):
     """The cursor-pull forwarder (forward.start_cursor_forwarder) runs
     over a ShardReader: drains existing rows, keeps following across a
